@@ -8,16 +8,17 @@ the manifest.
 Round K dataflow (all DataFrame ops; barriers land on shuffles):
 
   frontier_K ──schedule (robots + politeness cells)──► scheduled/deferred/blocked
-  scheduled ──SeenStore probe (Bloom + exact confirm)──► new / already-seen
-  new ──fetch join on pages ──extract kernel──► results_K (+ prob flag + classify)
+  scheduled ∪ blocked ──SeenStore claim (insert-only; no url is already
+      seen, checked against the exact table)──► seen_K delta + segments
+  scheduled ──fetch join on pages ──extract kernel──► results_K (+ prob flag + classify)
   results_K(unflagged) ──explode links──canonicalize──country/excluded──►
       candidates ──minus seen──dedup──► frontier_{K+1} = deferred ∪ candidates
 
 Scale notes: the fetch join is an equi-join on url against the pages
 table (SMJ at scale; co-partitioned if pages is bucketed by crc32(url));
-link expansion shuffles once on url for dedup; Bloom probe is one
-cogroup exchange on the segment partition key. html:binary is only read
-inside the fetch join's projection.
+link expansion shuffles once on url for dedup; the claim insert and the
+candidate probe are each one cogroup exchange on the segment partition
+key. html:binary is only read inside the fetch join's projection.
 """
 
 from __future__ import annotations
@@ -27,11 +28,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraudcrawler_spark.config import (
-    CrawlConfig,
-    STAGE_COUNTRY,
-    STAGE_DEDUP_PREVIOUS,
-)
+from fraudcrawler_spark.config import CrawlConfig, STAGE_COUNTRY
 from fraudcrawler_spark.frontier.bloom import SEEN_HASH_VERSION
 from fraudcrawler_spark.frontier.checkpoint import CrawlState
 from fraudcrawler_spark.frontier.politeness import STAGE_ROBOTS, schedule_status
@@ -425,37 +422,35 @@ def run_round(
     n_frontier = sum(sched_counts.values())
     if n_frontier == 0:
         return False
+    n_scheduled = int(sched_counts.get("scheduled", 0))
+    # every scheduled url is new: the claim invariant, checked below
+    n_new = n_scheduled
     scheduled = sched_st.where(F.col("sched_status") == "scheduled").drop("sched_status")
     deferred = sched_st.where(F.col("sched_status") == "deferred").drop("sched_status")
     blocked = sched_st.where(F.col("sched_status") == "blocked").drop("sched_status")
     _mark("t_schedule", tick)
 
-    # --- fused seen probe + claim (Bloom + exact confirm, one cogroup) -------
-    claim_input = scheduled.select("url").withColumn(
-        "is_blocked", F.lit(False)
-    ).unionByName(blocked.select("url").withColumn("is_blocked", F.lit(True)))
-    new_all = store.probe_and_claim(claim_input)
-    # no second localCheckpoint: probe_and_claim already materialized its
-    # fused cogroup output, and this is a narrow filter over that
-    # checkpointed RDD — re-scanning it is cheaper than another
-    # materialization job per round
-    new_urls = new_all.where(~F.col("is_blocked")).select("url")
-    n_new = new_urls.count()
-    dup = scheduled.join(new_urls, "url", "left_anti")
+    # --- seen claim: insert-only (robots-blocked urls are claimed too, so
+    # they never re-enter the frontier) ---------------------------------------
+    claimed = store.probe_and_claim(
+        scheduled.select("url").unionByName(blocked.select("url"))
+    )
     _mark("t_probe", tick)
 
     # persist claimed delta + segments NOW, then reload the store from
     # parquet — the round barrier that keeps seen-state lineage flat
     # store.partitions (manifest-adopted), NOT config.seen_partitions — the
     # persisted layout wins over whatever the resuming caller passed.
-    # The two writes are independent (both read the checkpointed probe
-    # output) — overlapped (§2.6).
+    # The two writes are independent — overlapped (§2.6). The seen-delta
+    # write runs the claim's invariant observation; check_claims fails the
+    # round before anything commits if a claimed url was already seen.
     _par(
         lambda: state.write("seen", round_no, with_part(
-            new_all.select("url"), store.partitions
+            claimed.select("url"), store.partitions
         ).withColumn("claim_round", F.lit(round_no)), ncoalesce=8),
         lambda: state.write("bloom", round_no, store.segments, ncoalesce=4),
     )
+    store.check_claims()
     store.load(state.read("bloom", round_no),
                _effective_seen(state, round_no))
     # segment health: max load factor across Bloom segments (>1.0 ⇒ FP
@@ -467,8 +462,7 @@ def run_round(
 
     # --- fetch + extract + flag + classify -----------------------------------
     items = (
-        scheduled.join(new_urls.select("url"), "url", "left_semi")
-        .withColumn("filtered", F.lit(False))
+        scheduled.withColumn("filtered", F.lit(False))
         .withColumn("filtered_at_stage", F.lit(None).cast("string"))
     )
     # auto-fallback: a round scheduling more urls than the broadcast bound
@@ -476,7 +470,7 @@ def run_round(
     # driver) — the scheduled count is already in hand, so decide per round
     bcast = (
         config.fetch_broadcast_urls
-        and sched_counts.get("scheduled", 0) <= config.fetch_broadcast_max_urls
+        and n_scheduled <= config.fetch_broadcast_max_urls
     )
     fetched = fetch_extract(items, tables["pages"],
                             threshold=config.probability_threshold,
@@ -661,7 +655,6 @@ def run_round(
     # --- lineage + metrics ----------------------------------------------------
     lineage = (
         _lineage(blocked, STAGE_ROBOTS)
-        .unionByName(_lineage(dup, STAGE_DEDUP_PREVIOUS))
         .unionByName(_lineage(country_flagged, STAGE_COUNTRY, "src_url"))
         .unionByName(_lineage(dropped, STAGE_EXCLUDED, "src_url"))
         .unionByName(_lineage(loop_dropped, "redirect_loop", "src_url"))
@@ -675,7 +668,6 @@ def run_round(
         .agg(F.count("*").alias("n_scheduled"))
         .withColumn("round", F.lit(round_no))
     )
-    n_scheduled = int(sched_counts.get("scheduled", 0))
     elapsed = time.time() - t0
     from fraudcrawler_spark.session import local_df
 
@@ -689,7 +681,7 @@ def run_round(
                 "n_deferred": int(sched_counts.get("deferred", 0)),
                 "n_blocked": int(sched_counts.get("blocked", 0)),
                 "n_new": n_new,
-                "n_dup": n_scheduled - n_new,
+                "n_dup": 0,  # by the claim invariant
                 "n_results": n_new,  # one result row per newly-claimed url
                 "n_enqueued": n_enqueued,
                 # cheap: raw_expanded is localCheckpointed; both slices are

@@ -1,27 +1,35 @@
-"""Distributed URL-seen store: crc32-partitioned Bloom segments + exact table.
+"""Distributed URL-seen store: crc32-partitioned filter segments + exact table.
 
 Replaces the reference's single-threaded in-memory set collector
 (orchestrator.py:92-93,150-188). Partitioning uses ``crc32(url) % P`` —
 computed natively in Spark (F.crc32) and identically in Python
 (zlib.crc32), so the trace simulator and the engine agree bit-for-bit
-and no per-row Python is needed for routing.
+and no per-row Python is needed for routing. Segments are Bloom filters
+or, for TTL recrawl, deletion-capable cuckoo filters (frontier/cuckoo.py).
 
-Probe path (per round):
+Probe path (``filter_new``, link candidates):
   candidates → part = crc32(url)%P, h1 = xxhash64(url) (both JVM columns —
-  the Arrow kernels never hash a url in Python) → cogroup with Bloom
-  segments →
-  definite-new (Bloom negative) short-circuits; Bloom positives are
-  confirmed with an exact anti-join against the persisted seen table
-  (FPs can never drop a URL — north_rule exactness).
-Update path: claimed urls cogroup-merged into per-partition segments
-(one task per segment), urls appended to the seen table.
+  the Arrow kernels never hash a url in Python) → cogroup with the
+  segments → filter-negatives are definitely new; filter-positives are
+  confirmed with an exact anti-join against the seen table (a false
+  positive never drops a url).
+Claim path (``probe_and_claim``, one round's scheduled + robots-blocked
+urls): insert-only. Every claimed url comes from the frontier, and every
+frontier url is unseen when its round starts: candidates were
+exact-filtered after the previous round's claims, deferred urls were
+never claimed, and TTL-refreshed urls were just retired. So the claim
+merges all urls into the segments (``add``: one cogroup, one task per
+segment) and appends them to the seen table without probing. Because
+every claim inserts, each cuckoo member owns its own fingerprint copy,
+which deletion relies on. The invariant is checked once per round: the
+claims are joined to the exact seen table under an observation on the
+seen-delta write, and ``check_claims`` raises ``SeenClaimError`` on a hit.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -57,6 +65,10 @@ PROBE_SCHEMA = StructType(
 )
 
 
+class SeenClaimError(RuntimeError):
+    """A round claimed a url that the exact seen table already held."""
+
+
 def with_part(df: DataFrame, partitions: int, url_col: str = "url") -> DataFrame:
     return df.withColumn(
         "part", F.pmod(F.crc32(F.col(url_col)), F.lit(partitions)).cast("int")
@@ -82,16 +94,18 @@ class SeenStore:
         capacity_per_part: int = 1 << 16,
         filter_kind: str = "bloom",
     ):
-        """filter_kind: 'bloom' (default) or 'cuckoo' — same probe/claim
-        semantics (negatives definite, positives exact-confirmed); cuckoo
-        additionally supports deletion (frontier/cuckoo.py). Persisted
-        segment rows self-describe their kind, so a resume reads either."""
+        """filter_kind: 'bloom' (default) or 'cuckoo' — same probe
+        semantics (negatives definite, positives exact-confirmed) and the
+        same insert-only claim; cuckoo additionally supports deletion
+        (frontier/cuckoo.py). Persisted segment rows self-describe their
+        kind, so a resume reads either."""
         self.spark = spark
         self.partitions = partitions
         self.capacity_per_part = capacity_per_part
         self.filter_kind = filter_kind
         self._segments: DataFrame | None = None  # (part, capacity, n_hashes, bitmap)
         self._seen: DataFrame | None = None  # (part, url)
+        self._claim_check: Observation | None = None
 
     # -- state I/O ---------------------------------------------------------
     def load(self, segments: DataFrame | None, seen: DataFrame | None) -> None:
@@ -164,125 +178,50 @@ class SeenStore:
         )
         return negatives.unionByName(confirmed_new)
 
-    # -- fused probe + claim -------------------------------------------------
+    # -- claim ---------------------------------------------------------------
     def probe_and_claim(self, urls: DataFrame, url_col: str = "url") -> DataFrame:
-        """ONE cogroup pass over (urls ⨝ segments): filter-negative urls
-        are definitely new — claimed into the segment immediately;
-        filter-positives are exact-confirmed against the seen table.
-        Confirmed false positives are appended to the exact seen table
-        only (Bloom: re-adding them to the bitmap would set already-set
-        bits — a no-op skipped entirely); the deletion-capable cuckoo
-        backend additionally claims them into the segments in a tiny
-        second pass so every member owns its own fingerprint copy.
+        """Claim ``urls``: insert every one into the segments and the seen
+        table (``add``). The claim does not probe, because of the claim
+        invariant: no url a round claims is in the exact seen table when
+        it is claimed (see the module docstring).
 
-        Input may carry extra BOOLEAN/STRING passthrough columns (e.g.
-        is_blocked); returns the newly-claimed rows (url + passthroughs).
-        Updates ``self._segments`` (caller persists). Halves the shuffle
-        and Python-pass count of the old probe-then-merge round path.
+        The invariant is checked, not assumed. The returned ``url`` rows
+        (lazy) are joined to the exact seen table and observed: the action
+        that runs them (the round's seen-delta write) counts the claims
+        the table already holds, without a job of its own.
+        ``check_claims`` then raises ``SeenClaimError`` if that count is
+        not zero.
+
+        Updates ``self._segments`` and ``self._seen`` (caller persists).
         """
-        extra_cols = [c for c in urls.columns if c != url_col]
-        inp = with_part_hash(
-            urls.select(F.col(url_col).alias("url"), *extra_cols), self.partitions
-        )
-        cap, kind = self.capacity_per_part, self.filter_kind
-
-        out_fields = [StructField("kind", StringType()), StructField("url", StringType())]
-        # passthroughs must be NULLABLE: segment rows carry null there even
-        # when the input column was non-nullable (e.g. lit(False))
-        out_fields += [
-            StructField(c, inp.schema[c].dataType, True) for c in extra_cols
-        ]
-        out_fields += [
-            StructField("part", IntegerType()),
-            StructField("capacity", LongType()),
-            StructField("n_hashes", IntegerType()),
-            StructField("n_items", LongType()),
-            StructField("bitmap", BinaryType()),
-        ]
-        out_schema = StructType(out_fields)
-        out_cols = [f.name for f in out_fields]
-
-        def _fused(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            part = int(left["part"].iloc[0]) if not left.empty else int(right["part"].iloc[0])
-            if right.empty:
-                seg, n_items = new_segment(kind, cap), 0
-            else:
-                seg = segments_from_pdf(right)[part]
-                n_items = int(right["n_items"].iloc[0]) if "n_items" in right else 0
-            seg_row = pd.DataFrame(
-                {"kind": ["seg"], "url": [None],
-                 **{c: [None] for c in extra_cols},
-                 "part": [part], "capacity": [seg.capacity],
-                 "n_hashes": [seg.n_hashes], "n_items": [n_items],
-                 "bitmap": [seg.to_bytes()]}
-            )
-            if left.empty:
-                return seg_row[out_cols]
-            # column-wise construction + JVM-hashed membership — zero
-            # per-url Python on the hot path (this kernel sees every
-            # scheduled url per round)
-            h1 = series_u64(left["h1"])
-            hit = seg.contains_hashed(h1)
-            n_new = int((~hit).sum())
-            if n_new:
-                seg.add_hashed(h1[~hit])
-                n_items += n_new
-                seg_row.loc[:, "n_items"] = n_items
-                seg_row.loc[:, "bitmap"] = [seg.to_bytes()]
-            url_part = pd.DataFrame(
-                {"kind": np.where(hit, "maybe", "new"),
-                 "url": left["url"].to_numpy(),
-                 **{c: left[c].to_numpy() for c in extra_cols},
-                 "part": None, "capacity": None, "n_hashes": None,
-                 "n_items": None, "bitmap": None}
-            )
-            return pd.concat([url_part[out_cols], seg_row[out_cols]],
-                             ignore_index=True)
-
-        seg_df = self._segments
-        if seg_df is None:
-            seg_df = self.spark.createDataFrame([], SEG_SCHEMA)
-        fused = (
-            inp.groupBy("part")
-            .cogroup(seg_df.groupBy("part"))
-            .applyInPandas(_fused, out_schema)
-        ).localCheckpoint()
-
-        self._segments = fused.where(F.col("kind") == "seg").select(
-            "part", "capacity", "n_hashes", "n_items", "bitmap"
-        )
-        definite_new = fused.where(F.col("kind") == "new").select("url", *extra_cols)
-        maybe = fused.where(F.col("kind") == "maybe").select("url", *extra_cols)
+        claims = urls.select(F.col(url_col).alias("url"))
+        checked, self._claim_check = claims, None
         if self._seen is not None:
-            confirmed_new = maybe.join(self._seen.select("url"), "url", "left_anti")
-        else:
-            confirmed_new = maybe
+            self._claim_check = Observation()
+            checked = (
+                claims.join(self._seen.select("url", F.lit(True).alias("_hit")),
+                            "url", "left")
+                .observe(self._claim_check, F.count("_hit").alias("n_seen"))
+                .drop("_hit")
+            )
+        self.add(claims)
+        return checked
 
-        if self.filter_kind == "cuckoo":
-            # Deletion-capable filters must hold one fingerprint copy PER
-            # member: a fingerprint-collision FP that is actually new
-            # shares its entry with some other member url — if it is not
-            # inserted itself, a later delete_many(other) would turn this
-            # url filter-negative (false negative → duplicate claim). The
-            # FP set is tiny, so the extra add() pass stays cheap and only
-            # this backend pays it.
-            confirmed_new = confirmed_new.localCheckpoint()
-            if confirmed_new.count() > 0:
-                self.add(confirmed_new.select("url"))  # segments + seen
-            new_all = definite_new.unionByName(confirmed_new)
-            add_seen = with_part(definite_new.select("url"), self.partitions)
-        else:
-            # Bloom false positives already answer contains() True, so
-            # merging them into the bitmap would set already-set bits — a
-            # no-op. Only the exact seen table needs them: append new_all
-            # (definite new + confirmed FPs) in one pass, no second
-            # cogroup and no extra count job per round.
-            new_all = definite_new.unionByName(confirmed_new)
-            add_seen = with_part(new_all.select("url"), self.partitions)
-        self._seen = (
-            add_seen if self._seen is None else self._seen.unionByName(add_seen)
-        )
-        return new_all
+    def check_claims(self) -> None:
+        """Raise ``SeenClaimError`` if the last ``probe_and_claim`` claimed a
+        url that was already in the exact seen table. Call it after an
+        action has run the rows that call returned: it waits for that
+        action's observation."""
+        obs, self._claim_check = self._claim_check, None
+        if obs is None:
+            return
+        n_seen = obs.get["n_seen"]
+        if n_seen:
+            raise SeenClaimError(
+                f"{n_seen} claimed url(s) were already in the exact seen "
+                "table: the frontier held already-seen urls, so the round "
+                "would fetch them twice"
+            )
 
     # -- retire (recrawl/TTL) ------------------------------------------------
     def retire(self, urls: DataFrame, url_col: str = "url") -> None:

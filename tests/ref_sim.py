@@ -352,7 +352,7 @@ def simulate_crawl(
 
         new = [s for s in scheduled if not is_seen(s[2])]
         # claim delta of this round = newly claimed scheduled + blocked
-        # (crawl.py claim_input includes blocked with is_blocked=True)
+        # (crawl.py claims the robots-blocked urls beside the scheduled ones)
         for _, _, u, _ in new:
             claim_hist[u].append(round_no)
         for u in blocked:

@@ -153,6 +153,98 @@ def test_crash_mid_round_resume(spark, corpus_dir, tmp_path_factory, crawl_state
     assert (a["filtered"].astype(bool) == b["filtered"].astype(bool)).all()
 
 
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_already_seen_frontier_url_fails_round(spark, corpus_dir,
+                                               tmp_path_factory, kind):
+    """The round's claim is insert-only because no frontier url is already
+    seen. A frontier that breaks this must fail the round loudly before
+    its commit, not log the url as a previous-run duplicate."""
+    from fraudcrawler_spark.frontier.seen import SeenClaimError
+
+    cfg = CrawlConfig(host_budget=8, max_depth=2, seen_filter_kind=kind)
+    root = str(tmp_path_factory.mktemp(f"claim_check_{kind}"))
+    state = run_crawl(spark, corpus_dir, root, cfg, max_rounds=1)
+    assert state.read_manifest()["last_round"] == 0
+
+    # rewrite the committed round-1 frontier: add a url round 0 claimed,
+    # at a priority that schedules it first on its host
+    old = state.read("frontier", 1)
+    schema, rows = old.schema, old.toPandas()
+    claimed = state.read("results", 0).select("url", "host").first()
+    assert claimed["url"] not in set(rows["url"])
+    rows = pd.concat([rows, pd.DataFrame([{
+        "url": claimed["url"], "host": claimed["host"],
+        "priority": -1, "crawl_depth": 1,
+    }])], ignore_index=True)
+    state.write("frontier", 1, spark.createDataFrame(rows, schema=schema))
+
+    with pytest.raises(SeenClaimError):
+        run_crawl(spark, corpus_dir, root, cfg, max_rounds=2)
+    assert state.read_manifest()["last_round"] == 0
+
+
+TTL_CFG = CrawlConfig(host_budget=8, max_depth=2, seen_filter_kind="cuckoo",
+                      recrawl_after_rounds=1)
+
+
+@pytest.fixture(scope="module")
+def ttl_golden(corpus_dir):
+    return simulate_crawl(corpus_dir, TTL_CFG, max_rounds=ROUNDS)
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize("table, round_arg", [
+    ("retired", 2),   # the retire delta of round 2
+    ("bloom", 2),     # after round 2's seen delta has landed
+    ("frontier", 3),  # round 2's last write before its commit
+])
+def test_ttl_crash_at_state_write_resumes_exactly(
+        spark, corpus_dir, tmp_path_factory, monkeypatch, ttl_golden,
+        table, round_arg):
+    """A TTL crawl that crashes at a state write of round 2 and is resumed
+    claims, retires and ends up seeing exactly what the reference does."""
+    from fraudcrawler_spark.frontier.checkpoint import CrawlState
+    from fraudcrawler_spark.frontier.crawl import _effective_seen
+
+    write = CrawlState.write
+
+    def crashing_write(self, t, round_no, df, **kw):
+        if (t, round_no) == (table, round_arg):
+            raise _Crash(f"crash at write of {t} {round_no}")
+        return write(self, t, round_no, df, **kw)
+
+    root = str(tmp_path_factory.mktemp(f"ttl_crash_{table}"))
+    monkeypatch.setattr(CrawlState, "write", crashing_write)
+    with pytest.raises(_Crash):
+        run_crawl(spark, corpus_dir, root, TTL_CFG, max_rounds=ROUNDS)
+    monkeypatch.setattr(CrawlState, "write", write)
+
+    crashed = CrawlState(spark, root)
+    assert crashed.read_manifest()["last_round"] == 1
+    if table == "bloom":
+        assert crashed.exists("seen", 2)
+
+    state = run_crawl(spark, corpus_dir, root, TTL_CFG, max_rounds=ROUNDS)
+    last = state.read_manifest()["last_round"]
+    assert last == len(ttl_golden["rounds"]) - 1
+    for rnd, g in enumerate(ttl_golden["rounds"]):
+        res = state.read("results", rnd).select(
+            "url", "priority", "crawl_depth", "host"
+        ).toPandas()
+        got = [r["url"] for r in sorted(res.to_dict("records"), key=_order_key)]
+        assert got == g["new"], f"round {rnd} claims"
+        ret = sorted(
+            r[0] for r in state.read("retired", rnd).select("url").collect()
+        ) if state.exists("retired", rnd) else []
+        assert ret == sorted(g["retired"]), f"round {rnd} retires"
+    assert ttl_golden["rounds"][2]["retired"]
+    seen = {r[0] for r in _effective_seen(state, last).select("url").collect()}
+    assert seen == ttl_golden["seen_set"]
+
+
 def test_salting_bounds_skew(spark, corpus_dir):
     """Zipf-head hosts split across salt cells: the widest (host, salt)
     cell is ~1/s of the widest host (the straggler-killer property)."""
