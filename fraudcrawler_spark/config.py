@@ -102,8 +102,9 @@ class CrawlConfig:
     # rate drops — Cho & Garcia-Molina's bias-corrected estimator over
     # its own digest history (the same arithmetic as the oracled
     # conformance_net.q_change_rate, applied per url in-engine). Urls
-    # with <2 observations stay on the base period. Off by default —
-    # the fixed-TTL path and its golden traces are untouched.
+    # with <2 observations stay on the base period. Off by default: every
+    # url's period is then k. Fixed and adaptive TTL share one due rule
+    # (frontier/crawl.py _recrawl_due: seen and last_claim <= round - period).
     adaptive_recrawl: bool = False
     adaptive_recrawl_max_factor: int = 4
     # frontier priority: "depth" (BFS, reference-faithful — golden traces

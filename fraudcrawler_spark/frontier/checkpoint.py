@@ -4,13 +4,17 @@ No Iceberg runtime jar ships in this sandbox (SURVEY.md §7 risk 4), so
 this layer emulates the snapshot semantics the engine needs on plain
 parquet + an atomic JSON manifest: every completed round commits
 
-    seen/round=K/        urls claimed in round K (partitioned by part)
-    bloom/round_K/       Bloom segment snapshot AFTER round K
-    frontier/round_{K+1} the next round's frontier
-    results/round_K/     result rows of round K
-    lineage/round_K/     per-url provenance (url, stage, src) for round K
-    metrics/round_K/     per-round + per-host counters
-    manifest.json        {"last_round": K, ...}   ← the commit point
+    seen/round=K/          urls claimed in round K (url, part, claim_round)
+    retired/round=K/       urls retired for recrawl in round K (TTL on only)
+    bloom/round=K/         seen-filter segment snapshot AFTER round K
+    frontier/round=K+1/    the next round's frontier
+    results/round=K/       result rows of round K
+    digests/round=K/       per-url content digests (adaptive recrawl only)
+    lineage/round=K/       per-url provenance (url, stage, src) for round K
+    metrics/round=K/       one row of round counters and phase times
+    host_metrics/round=K/  scheduled urls per host
+    seed_lineage/round=0/  discovery-flagged seeds (written by init_crawl)
+    manifest.json          {"last_round": K, ...}   ← the commit point
 
 The manifest is written tmp+rename (atomic on POSIX), so a crash
 mid-round leaves the previous snapshot intact and ``resume`` replays

@@ -1,12 +1,14 @@
 """Multi-round frontier crawl driver — M2/M3 (SURVEY.md §7).
 
 BFS-style iterated batch rounds (the reference's stage-barrier execution,
-orchestrator.py:525-626, generalized to a real frontier): one Spark job
-per round, checkpoint commit per round (CrawlState), exact-resume from
-the manifest.
+orchestrator.py:525-626, generalized to a real frontier): a round is a
+few dozen Spark jobs, committed as one checkpoint (CrawlState), and a
+crawl resumes exactly from the manifest.
 
 Round K dataflow (all DataFrame ops; barriers land on shuffles):
 
+  [TTL on] seen ∪ retired history ──per-url (last_claim, last_retire)──►
+      due urls ──retire from the store──► retired_K delta; due urls ∪ frontier_K
   frontier_K ──schedule (robots + politeness cells)──► scheduled/deferred/blocked
   scheduled ∪ blocked ──SeenStore claim (insert-only; no url is already
       seen, checked against the exact table)──► seen_K delta + segments
@@ -25,7 +27,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fraudcrawler_spark.config import CrawlConfig, STAGE_COUNTRY
@@ -172,40 +174,51 @@ def init_crawl(
     return state
 
 
-def _effective_seen(state: CrawlState, upto: int):
-    """The exact seen TABLE as of round ``upto``: union of per-round claim
-    deltas MINUS urls whose last retire is STRICTLY more recent than their
-    last claim (same-round retire+re-claim stays seen). With no retires ever written (the default, TTL off) this
-    is the plain delta union — zero extra cost. With TTL on, only the
-    retired url set (small: one expiry round's claims) pays a
-    semi/anti-join resolve; untouched urls pass through un-shuffled."""
+def _url_state(state: CrawlState, upto: int) -> DataFrame | None:
+    """Per-url recrawl state as of round ``upto``: ``(part, url,
+    last_claim, last_retire)`` from ONE max-aggregation over the claim
+    and retire histories (``last_retire`` is null for a url never
+    retired). Every TTL fact derives from it: see ``_is_seen`` and
+    ``_recrawl_due``."""
     seen = state.read_all("seen", upto)
     if seen is None:
         return None
+    hist = seen.select(
+        "part", "url", "claim_round",
+        F.lit(None).cast("int").alias("retire_round"),
+    )
     ret = state.read_all("retired", upto)
-    if ret is None:
-        # normalized to (part, url): the store unions per-round (part, url)
-        # deltas onto this in memory
-        return seen.select("part", "url")
-    ret_last = ret.groupBy("url").agg(F.max("retire_round").alias("rr"))
-    contested = (
-        seen.join(ret_last.select("url"), "url", "left_semi")
-        .groupBy("part", "url")
-        .agg(F.max("claim_round").alias("rc"))
-        .join(ret_last, "url")
-        # >= not >: the TTL flow retires and RE-CLAIMS in the same round
-        # (retire_round == claim_round == N, the claim happens after that
-        # round's retire), so an equal round means the url is seen. Strict
-        # > dropped it from the exact table while the cuckoo segments kept
-        # the re-claimed fingerprint — next round's filter-positive failed
-        # the exact confirm and the url was fetched AGAIN (r3 advice).
-        .where(F.col("rc") >= F.col("rr"))
-        .select("part", "url")
+    if ret is not None:
+        hist = hist.unionByName(ret.select("url", "retire_round"),
+                                allowMissingColumns=True)
+    return hist.groupBy("url").agg(
+        F.max("part").alias("part"),
+        F.max("claim_round").alias("last_claim"),
+        F.max("retire_round").alias("last_retire"),
+    ).select("part", "url", "last_claim", "last_retire")
+
+
+def _is_seen():
+    """A url is seen iff it was never retired or was claimed again in or
+    after the round of its last retire. >= not >: the TTL flow retires
+    and RE-CLAIMS in the same round (the claim happens after that round's
+    retire), so an equal round means seen. Strict > dropped it from the
+    exact table while the cuckoo segments kept the re-claimed fingerprint,
+    so the next round fetched it AGAIN."""
+    return F.col("last_retire").isNull() | (
+        F.col("last_claim") >= F.col("last_retire")
     )
-    clean = seen.join(ret_last.select("url"), "url", "left_anti").select(
-        "part", "url"
-    )
-    return clean.unionByName(contested)
+
+
+def _effective_seen(state: CrawlState, upto: int):
+    """The exact seen TABLE ``(part, url)`` as of round ``upto``. With no
+    retire ever written (TTL off, or before the first expiry) this is the
+    plain scan of the claim deltas, no aggregation; otherwise it is the
+    urls ``_url_state`` marks seen."""
+    if state.read_all("retired", upto) is None:
+        seen = state.read_all("seen", upto)
+        return None if seen is None else seen.select("part", "url")
+    return _url_state(state, upto).where(_is_seen()).select("part", "url")
 
 
 def _load_seen(spark: SparkSession, state: CrawlState, upto: int,
@@ -236,11 +249,14 @@ def _load_seen(spark: SparkSession, state: CrawlState, upto: int,
     return store
 
 
-def _adaptive_recrawl_due(
+def _recrawl_due(
     state: CrawlState, round_no: int, config: CrawlConfig
 ) -> DataFrame | None:
-    """Change-adaptive recrawl due set (config.adaptive_recrawl): a url
-    is due when rounds-since-last-claim ≥ its PERSONAL period — the base
+    """The urls round ``round_no`` retires: seen, and last claimed at
+    least ``period`` rounds ago (``last_claim <= round_no - period``).
+
+    ``period`` is k = ``config.recrawl_after_rounds``. With
+    ``config.adaptive_recrawl`` it is the url's PERSONAL period, the base
     k stretched up to k·max_factor as its observed change rate drops.
     Rate = Cho & Garcia-Molina's bias-corrected estimator
     r̂ = −ln((n − X + ½)/(n + ½)) over the url's own digest history
@@ -254,24 +270,27 @@ def _adaptive_recrawl_due(
     interval overestimates the per-k rate, snapping the url back to
     the base period faster than an exact estimator would.
 
-    Plan: one max-aggregation over the seen deltas (url-partitioned),
-    one lag window over the digest history — url-keyed, K-row
-    partitions, no skew — and a left join of the two MB-scale
-    summaries. Returns None before any claim carries claim_round (fresh
-    semantics fall back to the fixed-TTL path).
-    """
-    from pyspark.sql import Window
+    Retire idempotence is the seen predicate: a url retired and not
+    re-claimed since (its re-enqueue still deferred by the politeness
+    budget) is not seen, so it is never due. Retiring it AGAIN would run
+    a second cuckoo delete of the same fingerprint, which can evict a
+    colliding cohabitant's entry and spuriously re-fetch that other url.
 
+    Returns None before round k: no period is shorter than k.
+    """
     k = config.recrawl_after_rounds
-    seen_all = state.read_all("seen", round_no - 1)
-    if seen_all is None or "claim_round" not in seen_all.columns:
+    if round_no < k:
         return None
-    last = seen_all.groupBy("url").agg(
-        F.max("claim_round").alias("last_claim")
-    )
-    est = None
-    hist = state.read_all("digests", round_no - 1)
+    st = _url_state(state, round_no - 1)
+    if st is None:
+        return None
+    base = float(k)
+    period = F.lit(base)
+    hist = (state.read_all("digests", round_no - 1)
+            if config.adaptive_recrawl else None)
     if hist is not None:
+        # one lag window over the digest history (url-keyed, K-row
+        # partitions, no skew), left-joined to the url state
         w = Window.partitionBy("url").orderBy("obs_round")
         ch = hist.select("url", "obs_round", "content_hash").withColumn(
             "changed",
@@ -282,14 +301,11 @@ def _adaptive_recrawl_due(
             F.sum("changed").alias("x"),
             (F.count(F.lit(1)) - 1).alias("nint"),
         )
-    base = float(k)
-    cap = float(k * config.adaptive_recrawl_max_factor)
-    if est is None:
-        due = last.withColumn("period", F.lit(base))
-    else:
+        st = st.join(est, "url", "left")
         rate = -F.log(
             (F.col("nint") - F.col("x") + 0.5) / (F.col("nint") + 0.5)
         )
+        cap = float(k * config.adaptive_recrawl_max_factor)
         period = F.when(
             F.col("nint").isNull() | (F.col("nint") <= 0), F.lit(base)
         ).otherwise(
@@ -301,11 +317,8 @@ def _adaptive_recrawl_due(
                 ),
             )
         )
-        due = last.join(est, "url", "left").withColumn(
-            "period", F.coalesce(period, F.lit(base))
-        )
-    return due.where(
-        F.col("last_claim") <= F.lit(round_no) - F.col("period")
+    return st.where(
+        _is_seen() & (F.col("last_claim") <= F.lit(round_no) - period)
     ).select("url")
 
 
@@ -329,71 +342,24 @@ def run_round(
     tick = [time.time()]
     frontier = state.read("frontier", round_no)
 
-    # --- recrawl/TTL: retire urls whose LAST claim was `recrawl_after_rounds`
-    # rounds ago (cuckoo backend only — SeenStore.retire raises on Bloom).
-    # Retired urls probe filter-negative again, so re-enqueueing them into
-    # THIS round's frontier makes them fetch fresh; their re-claim lands in
-    # this round's seen delta (with its claim_round), so they expire again k
-    # rounds later (recurring recrawl). The retire is PERSISTED as a
-    # per-round `retired` delta so the round-barrier/resume seen reload can
-    # subtract it (see _effective_seen) — an in-memory-only prune would be
-    # resurrected by the next read_all and could permanently drop a
-    # fingerprint-collision url from recrawl (r3 review finding).
+    # --- recrawl/TTL: retire the due urls (_recrawl_due: seen, last claim
+    # at least one period ago; cuckoo backend only — SeenStore.retire
+    # raises on Bloom). Retired urls probe filter-negative again, so
+    # re-enqueueing them into THIS round's frontier makes them fetch
+    # fresh; their re-claim lands in this round's seen delta, which
+    # restarts their period (recurring recrawl). The retire is PERSISTED
+    # as a per-round `retired` delta: _url_state aggregates it with the
+    # claims, so the round-barrier/resume seen reload subtracts it and a
+    # url retired but not yet re-claimed is never due again.
     if config.recrawl_after_rounds is not None:
-        er = round_no - config.recrawl_after_rounds
-        cand = None
-        if config.adaptive_recrawl:
-            cand = _adaptive_recrawl_due(state, round_no, config)
-        if cand is None and er >= 0 and state.exists("seen", er):
-            cand = state.read("seen", er).select("url").distinct()
-            later = state.read_all("seen", round_no - 1)
-            if later is not None and "claim_round" in later.columns:
-                # urls re-claimed SINCE round er are not due yet
-                cand = cand.join(
-                    later.where(F.col("claim_round") > er).select("url"),
-                    "url", "left_anti",
-                )
-        if cand is not None:
-            # idempotence (r6 advice): a url retired in an EARLIER round
-            # that has not been re-claimed since (e.g. its re-enqueue is
-            # still deferred by the politeness budget) stays "due" — but
-            # retiring it AGAIN would run a second cuckoo delete of the
-            # same fingerprint, which can evict a colliding cohabitant's
-            # entry (~2^-16 per cohabitant) and spuriously re-fetch that
-            # other url. Drop urls whose last retire is not yet followed
-            # by a claim.
-            ret_all = state.read_all("retired", round_no - 1)
-            if ret_all is not None:
-                seen_all = state.read_all("seen", round_no - 1)
-                ret_last = ret_all.groupBy("url").agg(
-                    F.max("retire_round").alias("_rr")
-                )
-                if seen_all is not None and "claim_round" in seen_all.columns:
-                    claim_last = seen_all.groupBy("url").agg(
-                        F.max("claim_round").alias("_rc")
-                    )
-                    # strict >: the TTL flow retires and re-claims in the
-                    # SAME round (retire_round == claim_round, claim
-                    # last), so equal rounds mean the re-claim happened
-                    # and the url is fair game for its next expiry
-                    pending = (
-                        ret_last.join(claim_last, "url", "left")
-                        .where(
-                            F.col("_rc").isNull()
-                            | (F.col("_rr") > F.col("_rc"))
-                        )
-                        .select("url")
-                    )
-                else:
-                    pending = ret_last.select("url")
-                cand = cand.join(pending, "url", "left_anti")
-            expired = cand.localCheckpoint()
+        due = _recrawl_due(state, round_no, config)
+        if due is not None:
+            expired = due.localCheckpoint()
             if expired.count() > 0:
                 store.retire(expired)
                 state.write(
                     "retired", round_no,
-                    expired.select("url").withColumn(
-                        "retire_round", F.lit(round_no)),
+                    expired.withColumn("retire_round", F.lit(round_no)),
                     ncoalesce=1,
                 )
                 refresh = expired.join(

@@ -5,6 +5,7 @@ from __future__ import annotations
 import logging
 import os
 
+import pandas as pd
 from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
@@ -70,7 +71,6 @@ def local_df(spark: SparkSession, data, schema: str | None = None):
     with ``schema`` (DDL string, names taken from it). Falls back to the
     plain path for empty input (Arrow cannot infer dtypes there).
     """
-    import pandas as pd
     from pyspark.sql.types import StructType
 
     if not data:
@@ -106,7 +106,6 @@ def _prime(spark: SparkSession) -> None:
     flag = "spark.fraudcrawler.primed"
     if spark.conf.get(flag, "false") == "true":
         return
-    import pandas as pd  # noqa: F401  (ensures the Arrow path below works)
     from pyspark.sql import functions as F
 
     sc = spark.sparkContext

@@ -290,10 +290,11 @@ def simulate_crawl(
         if row["url"] not in frontier:
             frontier[row["url"]] = (0, 0)
 
-    # seen state with TTL-recrawl support (frontier/crawl.py:201-230 +
-    # _effective_seen): per-url claim-round history + last retire round.
-    # A url is (effectively) seen iff its LAST claim is >= its last retire
-    # — same-round retire+re-claim stays seen (crawl.py's `rc >= rr`).
+    # seen state with TTL-recrawl support (frontier/crawl.py _url_state,
+    # _is_seen, _recrawl_due): per-url claim-round history + last retire
+    # round. A url is (effectively) seen iff its LAST claim is >= its last
+    # retire — same-round retire+re-claim stays seen (`last_claim >=
+    # last_retire`).
     claim_hist: dict[str, list[int]] = defaultdict(list)
     retire_last: dict[str, int] = {}
 
@@ -310,7 +311,10 @@ def simulate_crawl(
         # --- TTL retire + re-enqueue (crawl.py run_round top): the seen
         # DELTA of round er = round_no - k, minus urls re-claimed since,
         # is retired this round and refreshed into the frontier at
-        # (priority 0, depth 0) unless already enqueued
+        # (priority 0, depth 0) unless already enqueued. The engine's rule
+        # (seen and last claim <= round_no - k) retires the same urls while
+        # the config is unchanged: no seen url has an older last claim,
+        # because each was retired in its due round.
         retired_now: list[str] = []
         if config.recrawl_after_rounds is not None:
             er = round_no - config.recrawl_after_rounds

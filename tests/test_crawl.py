@@ -198,29 +198,48 @@ class _Crash(RuntimeError):
 
 @pytest.mark.parametrize("table, round_arg", [
     ("retired", 2),   # the retire delta of round 2
+    ("seen", 2),      # round 2's claim delta
     ("bloom", 2),     # after round 2's seen delta has landed
+    ("results", 2),
+    ("lineage", 2),
+    ("metrics", 2),
+    ("host_metrics", 2),
     ("frontier", 3),  # round 2's last write before its commit
+    ("manifest", 2),  # inside CrawlState.commit(2), before the rename
 ])
 def test_ttl_crash_at_state_write_resumes_exactly(
         spark, corpus_dir, tmp_path_factory, monkeypatch, ttl_golden,
         table, round_arg):
     """A TTL crawl that crashes at a state write of round 2 and is resumed
     claims, retires and ends up seeing exactly what the reference does."""
+    import json
+
+    from fraudcrawler_spark.frontier import checkpoint
     from fraudcrawler_spark.frontier.checkpoint import CrawlState
     from fraudcrawler_spark.frontier.crawl import _effective_seen
 
-    write = CrawlState.write
+    write, replace = CrawlState.write, checkpoint.os.replace
 
     def crashing_write(self, t, round_no, df, **kw):
         if (t, round_no) == (table, round_arg):
             raise _Crash(f"crash at write of {t} {round_no}")
         return write(self, t, round_no, df, **kw)
 
+    def crashing_replace(src, dst):
+        if dst.endswith("manifest.json"):
+            with open(src) as f:
+                if json.load(f)["last_round"] == round_arg:
+                    raise _Crash(f"crash in commit of round {round_arg}")
+        return replace(src, dst)
+
     root = str(tmp_path_factory.mktemp(f"ttl_crash_{table}"))
-    monkeypatch.setattr(CrawlState, "write", crashing_write)
+    if table == "manifest":
+        monkeypatch.setattr(checkpoint.os, "replace", crashing_replace)
+    else:
+        monkeypatch.setattr(CrawlState, "write", crashing_write)
     with pytest.raises(_Crash):
         run_crawl(spark, corpus_dir, root, TTL_CFG, max_rounds=ROUNDS)
-    monkeypatch.setattr(CrawlState, "write", write)
+    monkeypatch.undo()
 
     crashed = CrawlState(spark, root)
     assert crashed.read_manifest()["last_round"] == 1

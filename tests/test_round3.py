@@ -451,11 +451,15 @@ def test_bpe_chain_equals_reference_unit_list_bpe():
 
 def test_effective_seen_subtracts_retires(spark, tmp_path):
     """Review finding (r3): retire() pruning must survive the round
-    barrier. _effective_seen: url seen iff last claim round > last retire
+    barrier. _effective_seen: url seen iff last claim round >= last retire
     round — retired-and-not-reclaimed urls are OUT, reclaimed-later urls
-    are IN, untouched urls pass through."""
+    are IN, untouched urls pass through. The due rule reads the same
+    state: a seen url is due when last_claim <= round - k, so a url
+    retired and not re-claimed since is never retired again, with fixed
+    or adaptive periods."""
+    from fraudcrawler_spark.config import CrawlConfig
     from fraudcrawler_spark.frontier.checkpoint import CrawlState
-    from fraudcrawler_spark.frontier.crawl import _effective_seen
+    from fraudcrawler_spark.frontier.crawl import _effective_seen, _recrawl_due
 
     state = CrawlState(spark, str(tmp_path / "st"))
     rows0 = [("u_keep", 0, 0), ("u_retired", 1, 0), ("u_reclaimed", 2, 0),
@@ -480,6 +484,30 @@ def test_effective_seen_subtracts_retires(spark, tmp_path):
     # u_sameround's retire hasn't happened yet
     got1 = {r["url"] for r in _effective_seen(state, 1).collect()}
     assert got1 == {"u_keep", "u_sameround"}
+
+    # due sets read the history before the round: round 2 sees rounds 0-1
+    # (u_reclaimed's round-2 claim not yet), round 3 sees rounds 0-2
+    want = {
+        (1, 2): {"u_keep", "u_sameround"},
+        (2, 2): {"u_keep", "u_sameround"},
+        (1, 3): {"u_keep", "u_reclaimed", "u_sameround"},
+        (2, 3): {"u_keep"},
+    }
+    # adaptive: u_keep's content never changed, so its period stretches
+    # to the 4k cap; u_sameround changed every interval and stays on k
+    state.write("digests", 1, spark.createDataFrame(
+        [("u_keep", 7, 0), ("u_keep", 7, 1),
+         ("u_sameround", 7, 0), ("u_sameround", 8, 1)],
+        "url string, content_hash long, obs_round int"))
+    for adaptive in (False, True):
+        for (k, rnd), urls in want.items():
+            cfg = CrawlConfig(seen_filter_kind="cuckoo",
+                              recrawl_after_rounds=k,
+                              adaptive_recrawl=adaptive)
+            due = {r["url"] for r in _recrawl_due(state, rnd, cfg).collect()}
+            assert due == (urls - {"u_keep"} if adaptive else urls), \
+                (k, rnd, adaptive)
+    assert _recrawl_due(state, 1, CrawlConfig(recrawl_after_rounds=2)) is None
 
 
 def test_ttl_recrawl_no_duplicate_claims(spark, corpus_dir, tmp_path_factory):

@@ -47,3 +47,14 @@ def test_default_driver_mem_fits_machine():
     assert re.fullmatch(r"[1-9][0-9]*g", mem)
     phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
     assert int(mem[:-1]) <= max(1, phys_gb)
+
+
+def test_prime_runs_without_warning(spark, monkeypatch, caplog):
+    """The warm-up completes on a real session: every priming query runs,
+    none fails into the warning."""
+    monkeypatch.delenv("FC_NO_PRIME", raising=False)
+    spark.conf.set("spark.fraudcrawler.primed", "false")
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session._prime(spark)
+    assert "warm-up failed" not in caplog.text
+    assert spark.conf.get("spark.fraudcrawler.primed") == "true"
