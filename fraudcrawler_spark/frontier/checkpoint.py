@@ -12,6 +12,7 @@ parquet + an atomic JSON manifest: every completed round commits
     digests/round=K/       per-url content digests (adaptive recrawl only)
     lineage/round=K/       per-url provenance (url, stage, src) for round K
     metrics/round=K/       one row of round counters and phase times
+                           (n_codegen_compiles: classes the round compiled)
     host_metrics/round=K/  scheduled urls per host
     seed_lineage/round=0/  discovery-flagged seeds (written by init_crawl)
     manifest.json          {"last_round": K, ...}   ← the commit point

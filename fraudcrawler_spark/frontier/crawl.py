@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fraudcrawler_spark.config import CrawlConfig, STAGE_COUNTRY
@@ -40,6 +40,7 @@ from fraudcrawler_spark.operators.classify_stage import classify_stage
 from fraudcrawler_spark.operators.discover import discover
 from fraudcrawler_spark.operators.fetch import fetch_extract
 from fraudcrawler_spark.pipeline import prompts_from_dim, read_corpus
+from fraudcrawler_spark.session import codegen_compiles, local_df
 
 STAGE_EXCLUDED = "excluded domain (hard drop)"
 
@@ -332,6 +333,7 @@ def run_round(
 ) -> bool:
     """Execute round ``round_no``; returns False when the frontier is empty."""
     t0 = time.time()
+    compiles0 = codegen_compiles(spark)
     phase: dict[str, float] = {}
 
     def _mark(name: str, since: list[float]) -> None:
@@ -410,20 +412,21 @@ def run_round(
     # The two writes are independent — overlapped (§2.6). The seen-delta
     # write runs the claim's invariant observation; check_claims fails the
     # round before anything commits if a claimed url was already seen.
+    # The bloom write observes segment health, the max load factor across
+    # segments (>1.0 ⇒ FP rate past design point; exactness unaffected,
+    # resize advised), without a job of its own.
+    fill = Observation()
     _par(
         lambda: state.write("seen", round_no, with_part(
             claimed.select("url"), store.partitions
         ).withColumn("claim_round", F.lit(round_no)), ncoalesce=8),
-        lambda: state.write("bloom", round_no, store.segments, ncoalesce=4),
+        lambda: state.write("bloom", round_no, store.segments.observe(
+            fill, F.max(F.col("n_items") / F.col("capacity")).alias("m")
+        ), ncoalesce=4),
     )
     store.check_claims()
     store.load(state.read("bloom", round_no),
                _effective_seen(state, round_no))
-    # segment health: max load factor across Bloom segments (>1.0 ⇒ FP
-    # rate past design point; exactness unaffected, resize advised)
-    fill = store.segments.select(
-        F.max(F.col("n_items") / F.col("capacity")).alias("m")
-    ).collect()[0]["m"]
     _mark("t_claim", tick)
 
     # --- fetch + extract + flag + classify -----------------------------------
@@ -635,8 +638,6 @@ def run_round(
         .withColumn("round", F.lit(round_no))
     )
     elapsed = time.time() - t0
-    from fraudcrawler_spark.session import local_df
-
     totals = local_df(
         spark,
         [
@@ -662,7 +663,12 @@ def run_round(
                 "n_trap_dropped": int(n_trap_dropped),
                 "elapsed_sec": elapsed,
                 "urls_per_sec": (n_scheduled + n_new) / elapsed if elapsed > 0 else 0.0,
-                "seen_fill_ratio": float(fill or 0.0),
+                "seen_fill_ratio": float(fill.get["m"] or 0.0),
+                # classes compiled since the round began (the commit
+                # writes below are not in it, as in elapsed_sec); about 0
+                # when this JVM has run the round's plans before
+                # (session.get_spark sizes the codegen cache)
+                "n_codegen_compiles": codegen_compiles(spark) - compiles0,
                 **phase,
             }
         ]

@@ -153,6 +153,40 @@ def test_crash_mid_round_resume(spark, corpus_dir, tmp_path_factory, crawl_state
     assert (a["filtered"].astype(bool) == b["filtered"].astype(bool)).all()
 
 
+def test_seen_fill_ratio_is_max_bloom_load(crawl_state):
+    """A round's seen_fill_ratio (observed on its bloom write) equals the
+    max n_items/capacity of that round's committed bloom table."""
+    last = crawl_state.read_manifest()["last_round"]
+    for rnd in range(last + 1):
+        got = crawl_state.read("metrics", rnd).first()["seen_fill_ratio"]
+        want = crawl_state.read("bloom", rnd).select(
+            F.max(F.col("n_items") / F.col("capacity"))
+        ).first()[0]
+        assert want > 0
+        assert got == want, f"round {rnd}"
+
+
+# literals no other test's crawl uses (ints are inlined into generated
+# code), so the first crawl's plans are new to the JVM whatever ran before
+WARM_CFG = CrawlConfig(host_budget=6, max_depth=2, seen_partitions=16,
+                       salt_shards=3, probability_threshold=0.11)
+
+
+def test_warm_crawl_compiles_nothing(spark, corpus_dir, tmp_path_factory):
+    """The second of two identical crawls in one JVM compiles almost no
+    class: the codegen cache (session.get_spark) holds the crawl's whole
+    plan set, so rounds do not evict each other's classes."""
+    counts = []
+    for i in range(2):
+        root = str(tmp_path_factory.mktemp(f"warm_crawl_{i}"))
+        state = run_crawl(spark, corpus_dir, root, WARM_CFG, max_rounds=2)
+        m = state.read_all("metrics", 1).toPandas()
+        assert len(m) == 2
+        assert m["n_codegen_compiles"].notna().all()
+        counts.append(int(m["n_codegen_compiles"].sum()))
+    assert counts[1] < counts[0] / 10, counts
+
+
 @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
 def test_already_seen_frontier_url_fails_round(spark, corpus_dir,
                                                tmp_path_factory, kind):
