@@ -25,27 +25,17 @@ on the classpath (e.g. ``spark-submit --packages org.apache.iceberg:
 iceberg-spark-runtime-4.1_2.13:<version>`` or SPARK_GRAFT_ICEBERG_JAR) —
 no code change needed, same CrawlState API either way.
 
-Re-attempted r4 (2026-08-17): urllib to repo1.maven.org → DNS gaierror
-(-2), ``pip download pyiceberg`` → no route, full-disk ``find`` for any
-iceberg/delta/hudi jar → none. Conclusion unchanged: the runtime branch
-is exercisable only outside this sandbox.
-
-Re-attempted r5 (2026-08-17 22:35 UTC): ``pip download pyiceberg
---no-deps`` → "No matching distribution found" (resolver reaches no
-index), ``curl -I repo1.maven.org`` → no response, full-disk find for
-iceberg/delta jars → none. Conclusion unchanged; the probe + the
-documented spark-submit --packages path remain the activation story.
-
-Re-attempted r6 (2026-08-22 02:48 UTC): ``pip download pyiceberg
---no-deps`` → "No matching distribution found", urllib to
-repo1.maven.org → DNS gaierror(-2), full-disk find for
-iceberg-spark-runtime jars → none. Conclusion unchanged.
+Later attempts to fetch the runtime jar or ``pyiceberg`` found no package
+index and no Iceberg jar on disk, so the Iceberg branch runs only where
+the jar is on the classpath: ``iceberg_jar_present`` plus the documented
+spark-submit --packages path are how it is switched on.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,19 +49,21 @@ def iceberg_jar_present(spark: SparkSession) -> bool:
     Probes through Spark's Utils.classForName first — jars shipped via
     --packages/--jars land in Spark's mutable URL classloader, which the
     root-classloader ``java.lang.Class.forName`` does NOT search — and
-    falls back to plain reflection for embedded/classpath jars."""
+    falls back to plain reflection for embedded/classpath jars. A missing
+    class raises ``Py4JJavaError`` (ClassNotFoundException) from either
+    probe; any other failure propagates."""
     name = "org.apache.iceberg.spark.SparkCatalog"
     try:
         spark._jvm.org.apache.spark.util.Utils.classForName(  # type: ignore[union-attr]
             name, False, False
         )
         return True
-    except Exception:
+    except Py4JJavaError:
         pass
     try:
         spark._jvm.java.lang.Class.forName(name)  # type: ignore[union-attr]
         return True
-    except Exception:
+    except Py4JJavaError:
         return False
 
 

@@ -13,9 +13,12 @@ parquet + an atomic JSON manifest: every completed round commits
     lineage/round=K/       per-url provenance (url, stage, src) for round K
     metrics/round=K/       one row of round counters and phase times
                            (n_codegen_compiles: classes the round compiled)
-    host_metrics/round=K/  scheduled urls per host
     seed_lineage/round=0/  discovery-flagged seeds (written by init_crawl)
     manifest.json          {"last_round": K, ...}   ← the commit point
+
+Per-host schedules are not a table: results holds one row per scheduled
+url with its host and round, so ``results.groupBy("round", "host")``
+gives them when read.
 
 The manifest is written tmp+rename (atomic on POSIX), so a crash
 mid-round leaves the previous snapshot intact and ``resume`` replays

@@ -3,7 +3,9 @@
 BFS-style iterated batch rounds (the reference's stage-barrier execution,
 orchestrator.py:525-626, generalized to a real frontier): a round is a
 few dozen Spark jobs, committed as one checkpoint (CrawlState), and a
-crawl resumes exactly from the manifest.
+crawl resumes exactly from the manifest. The round counters in the
+metrics table are Observations on checkpoints and writes the round runs
+anyway (``_checkpoint``): no job runs only to count.
 
 Round K dataflow (all DataFrame ops; barriers land on shuffles):
 
@@ -26,6 +28,8 @@ key. html:binary is only read inside the fetch join's projection.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -55,20 +59,25 @@ def _nc(rows: int) -> int | None:
 
 
 def _par(*thunks) -> None:
-    """Run independent Spark actions from driver threads so their jobs
+    """Run independent state writes from driver threads so their jobs
     overlap (optimization guide §2.6): the scheduler back-fills executor
-    slots freed by one job's task tail with the next job's tasks. Used
-    for the per-round state writes that have no data dependency on each
-    other — each write is its own job either way, so failure semantics
-    are unchanged (any exception still aborts the round pre-commit)."""
-    if len(thunks) == 1:
-        thunks[0]()
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
+    slots freed by one job's task tail with the next job's tasks. Each
+    write is its own job either way; any exception aborts the round
+    before its commit."""
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
         for f in [ex.submit(t) for t in thunks]:
             f.result()
+
+
+def _checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+    """``df.localCheckpoint()`` plus the named aggregates over its rows,
+    taken by an Observation on the checkpoint's own job: a round counter
+    costs no job of its own. Empty input reads 0 for count/count_if."""
+    obs = Observation()
+    df = df.observe(obs, *(c.alias(n) for n, c in aggs.items()))
+    df = df.localCheckpoint()
+    got = obs.get
+    return df, {n: got[n] for n in aggs}
 
 
 def _lineage(df: DataFrame, stage: str, src_col: str | None = None) -> DataFrame:
@@ -331,7 +340,9 @@ def run_round(
     tables: dict[str, DataFrame],
     store: SeenStore,
 ) -> bool:
-    """Execute round ``round_no``; returns False when the frontier is empty."""
+    """Execute round ``round_no``; returns False when the frontier is empty.
+    Classifies with ``config.prompts``, into which ``run_crawl`` resolves
+    the corpus prompt dim once per crawl."""
     t0 = time.time()
     compiles0 = codegen_compiles(spark)
     phase: dict[str, float] = {}
@@ -356,8 +367,8 @@ def run_round(
     if config.recrawl_after_rounds is not None:
         due = _recrawl_due(state, round_no, config)
         if due is not None:
-            expired = due.localCheckpoint()
-            if expired.count() > 0:
+            expired, due_n = _checkpoint(due, n=F.count(F.lit(1)))
+            if due_n["n"] > 0:
                 store.retire(expired)
                 state.write(
                     "retired", round_no,
@@ -377,22 +388,19 @@ def run_round(
 
     # --- politeness + robots ------------------------------------------------
     # ONE window pass, materialized once (localCheckpoint truncates lineage
-    # so downstream actions don't replay the round DAG), then sliced.
-    # n_frontier comes from the status counts — no separate frontier-scan
-    # job (every frontier row gets exactly one sched_status).
-    sched_st = schedule_status(
-        frontier, tables.get("robots"), config.host_budget, config.salt_shards
-    ).localCheckpoint()
-    sched_counts = {
-        r["sched_status"]: r["count"]
-        for r in sched_st.groupBy("sched_status").count().collect()
-    }
-    n_frontier = sum(sched_counts.values())
-    if n_frontier == 0:
+    # so downstream actions don't replay the round DAG), then sliced. The
+    # status counts are an observation on that checkpoint's own job (every
+    # frontier row gets exactly one sched_status).
+    sched_st, sched_n = _checkpoint(
+        schedule_status(frontier, tables.get("robots"), config.host_budget,
+                        config.salt_shards),
+        n_frontier=F.count(F.lit(1)),
+        **{f"n_{s}": F.count_if(F.col("sched_status") == s)
+           for s in ("scheduled", "deferred", "blocked")},
+    )
+    if sched_n["n_frontier"] == 0:
         return False
-    n_scheduled = int(sched_counts.get("scheduled", 0))
-    # every scheduled url is new: the claim invariant, checked below
-    n_new = n_scheduled
+    n_scheduled, n_deferred = sched_n["n_scheduled"], sched_n["n_deferred"]
     scheduled = sched_st.where(F.col("sched_status") == "scheduled").drop("sched_status")
     deferred = sched_st.where(F.col("sched_status") == "deferred").drop("sched_status")
     blocked = sched_st.where(F.col("sched_status") == "blocked").drop("sched_status")
@@ -444,16 +452,12 @@ def run_round(
     fetched = fetch_extract(items, tables["pages"],
                             threshold=config.probability_threshold,
                             broadcast_urls=bcast)
-    prompts = config.prompts or (
-        prompts_from_dim(tables["prompts"]) if "prompts" in tables else ()
-    )
-    results = classify_stage(fetched, prompts).withColumn(
-        "round", F.lit(round_no)
-    )
+    results = classify_stage(fetched, config.prompts).withColumn(
+        "round", F.lit(round_no))
     # results parquet is both the round output and the barrier for
     # expansion; ncoalesce keeps a small round from writing one tiny
     # file per shuffle partition (32+ files for a 1.5k-row round)
-    state.write("results", round_no, results, ncoalesce=_nc(n_new))
+    state.write("results", round_no, results, ncoalesce=_nc(n_scheduled))
     results = state.read("results", round_no)
     if config.adaptive_recrawl:
         # per-url content digest delta: the change signal the adaptive
@@ -546,7 +550,13 @@ def run_round(
         .when(~keep, F.lit("country"))
         .when(F.col("_excl"), F.lit("excluded"))
         .otherwise(F.lit("ok")),
-    ).drop("_excl", "_redir_loop").localCheckpoint()
+    ).drop("_excl", "_redir_loop")
+    # both counts read 0 when resolve_redirects is off (constant false)
+    raw_expanded, link_n = _checkpoint(
+        raw_expanded,
+        n_redirected=F.count_if(F.col("_redirected")),
+        n_redirect_loops=F.count_if(F.col("link_status") == "redirect_loop"),
+    )
     country_flagged = raw_expanded.where(F.col("link_status") == "country")
     dropped = raw_expanded.where(F.col("link_status") == "excluded")
     loop_dropped = raw_expanded.where(F.col("link_status") == "redirect_loop")
@@ -579,15 +589,15 @@ def run_round(
             )
             .select("host", "_template", F.lit(True).alias("_trap"))
         )
-        expanded = expanded.join(
-            traps, ["host", "_template"], "left"
-        ).localCheckpoint()
-        trap_dropped = expanded.where(F.col("_trap"))
-        n_trap_dropped = trap_dropped.count()
+        expanded, trap_n = _checkpoint(
+            expanded.join(traps, ["host", "_template"], "left"),
+            n=F.count_if(F.col("_trap")),
+        )
+        n_trap_dropped = trap_n["n"]
+        trap_dropped = expanded.where(F.col("_trap")).drop("_template", "_trap")
         expanded = expanded.where(F.col("_trap").isNull()).drop(
             "_template", "_trap"
         )
-        trap_dropped = trap_dropped.drop("_template", "_trap")
 
     candidates = expanded.groupBy("url").agg(
         F.first("host").alias("host"),
@@ -614,8 +624,11 @@ def run_round(
         "url", "left_semi",
     )
     # also drop candidates already waiting in the deferred frontier
-    fresh = fresh.join(deferred.select("url"), "url", "left_anti").localCheckpoint()
-    n_enqueued = fresh.count()
+    fresh, enq_n = _checkpoint(
+        fresh.join(deferred.select("url"), "url", "left_anti"),
+        n=F.count(F.lit(1)),
+    )
+    n_enqueued = enq_n["n"]
     next_frontier = deferred.select(*FRONTIER_COLS).unionByName(
         fresh.select(*FRONTIER_COLS)
     )
@@ -632,37 +645,22 @@ def run_round(
     if trap_dropped is not None:
         lineage = lineage.unionByName(_lineage(trap_dropped, "trap", "src_url"))
     lineage = lineage.withColumn("round", F.lit(round_no))
-    host_metrics = (
-        scheduled.groupBy("host")
-        .agg(F.count("*").alias("n_scheduled"))
-        .withColumn("round", F.lit(round_no))
-    )
     elapsed = time.time() - t0
     totals = local_df(
         spark,
         [
             {
                 "round": round_no,
-                "n_frontier": n_frontier,
-                "n_scheduled": n_scheduled,
-                "n_deferred": int(sched_counts.get("deferred", 0)),
-                "n_blocked": int(sched_counts.get("blocked", 0)),
-                "n_new": n_new,
-                "n_dup": 0,  # by the claim invariant
-                "n_results": n_new,  # one result row per newly-claimed url
+                **sched_n,  # n_frontier, n_scheduled, n_deferred, n_blocked
+                # every scheduled url is new: the claim invariant
+                "n_new": n_scheduled,
+                "n_dup": 0,
+                "n_results": n_scheduled,  # one result row per claimed url
                 "n_enqueued": n_enqueued,
-                # cheap: raw_expanded is localCheckpointed; both slices are
-                # metadata-only scans of the materialized partition. Zero
-                # when the corresponding config flag is off.
-                "n_redirected": int(
-                    raw_expanded.where(F.col("_redirected")).count()
-                ) if redirect_map is not None else 0,
-                "n_redirect_loops": int(
-                    loop_dropped.count()
-                ) if redirect_map is not None else 0,
-                "n_trap_dropped": int(n_trap_dropped),
+                **link_n,  # n_redirected, n_redirect_loops
+                "n_trap_dropped": n_trap_dropped,
                 "elapsed_sec": elapsed,
-                "urls_per_sec": (n_scheduled + n_new) / elapsed if elapsed > 0 else 0.0,
+                "urls_per_sec": 2 * n_scheduled / elapsed if elapsed > 0 else 0.0,
                 "seen_fill_ratio": float(fill.get["m"] or 0.0),
                 # classes compiled since the round began (the commit
                 # writes below are not in it, as in elapsed_sec); about 0
@@ -675,19 +673,17 @@ def run_round(
     )
 
     # --- commit ---------------------------------------------------------------
-    # the four commit tables are mutually independent (all inputs are
+    # the three commit tables are mutually independent (all inputs are
     # checkpointed/derived above) — overlap their jobs (§2.6); the
     # manifest commit still happens strictly after ALL of them land
     _par(
         lambda: state.write("lineage", round_no, lineage,
                             ncoalesce=_nc(n_enqueued + n_scheduled)),
         lambda: state.write("metrics", round_no, totals, ncoalesce=1),
-        lambda: state.write("host_metrics", round_no, host_metrics,
-                            ncoalesce=1),
         lambda: state.write(
             "frontier", round_no + 1, next_frontier,
             sort_cols=["priority", "host", "crawl_depth"],
-            ncoalesce=_nc(n_enqueued + int(sched_counts.get("deferred", 0))),
+            ncoalesce=_nc(n_enqueued + n_deferred),
         ),
     )
     state.commit(round_no)
@@ -774,6 +770,9 @@ def run_crawl(
             tables.get("robots"), tables["fetch_log"],
             factor=config.adaptive_delay_factor,
         ).localCheckpoint()
+    if not config.prompts and "prompts" in tables:
+        # a static dim: collected once per crawl, not once per round
+        config = replace(config, prompts=prompts_from_dim(tables["prompts"]))
     start = manifest["last_round"] + 1
     store = _load_seen(spark, state, manifest["last_round"], config)
     # fail fast, not at round k: retire() requires the deletion-capable

@@ -78,9 +78,32 @@ def test_crawl_result_field_parity(crawl_state, golden):
 
 
 def test_politeness_budget(crawl_state):
+    """Per-(round, host) schedules, derived from results (one row per
+    scheduled url), stay within the host budget."""
     last = crawl_state.read_manifest()["last_round"]
-    hm = crawl_state.read_all("host_metrics", last).toPandas()
+    hm = crawl_state.read_all("results", last).groupBy("round", "host").agg(
+        F.count(F.lit(1)).alias("n_scheduled")).toPandas()
+    assert len(hm) > 0
     assert (hm["n_scheduled"] <= CFG.host_budget).all()
+
+
+def test_round_counters_match_tables_and_golden(crawl_state, golden):
+    """Every round's metrics counters agree with the rows the round
+    committed and with the reference trace."""
+    last = crawl_state.read_manifest()["last_round"]
+    assert last == len(golden["rounds"]) - 1
+    for rnd, g in enumerate(golden["rounds"]):
+        m = crawl_state.read("metrics", rnd).first()
+        stages = dict(crawl_state.read("lineage", rnd).groupBy("stage")
+                      .count().collect())
+        assert m["n_frontier"] == (
+            m["n_scheduled"] + m["n_deferred"] + m["n_blocked"]), rnd
+        assert m["n_scheduled"] == crawl_state.read("results", rnd).count()
+        assert m["n_scheduled"] == len(g["new"]), rnd
+        assert m["n_blocked"] == stages.get(STAGE_ROBOTS, 0), rnd
+        assert m["n_blocked"] == len(g["blocked"]), rnd
+        assert m["n_deferred"] == g["n_deferred"], rnd
+        assert m["n_enqueued"] == stages.get("enqueued", 0), rnd
 
 
 def test_robots_respected(crawl_state, spark, corpus_dir):
@@ -237,7 +260,6 @@ class _Crash(RuntimeError):
     ("results", 2),
     ("lineage", 2),
     ("metrics", 2),
-    ("host_metrics", 2),
     ("frontier", 3),  # round 2's last write before its commit
     ("manifest", 2),  # inside CrawlState.commit(2), before the rename
 ])

@@ -229,6 +229,29 @@ def test_iceberg_session_conf_shape():
     assert conf["spark.jars"] == "/opt/iceberg.jar"
 
 
+def test_iceberg_probe_fails_only_on_missing_class(spark):
+    """The runtime-jar probe reads a missing class (a Java exception from
+    both probes) as "no Iceberg"; any other probe failure propagates."""
+    from unittest.mock import MagicMock
+
+    from py4j.protocol import Py4JJavaError
+
+    from fraudcrawler_spark.catalog import iceberg_jar_present
+
+    assert iceberg_jar_present(spark) is False
+
+    jvm = MagicMock()
+    jvm.org.apache.spark.util.Utils.classForName.side_effect = RuntimeError("a")
+    with pytest.raises(RuntimeError, match="a"):
+        iceberg_jar_present(MagicMock(_jvm=jvm))
+
+    missing = Py4JJavaError("missing", MagicMock(_target_id="o1"))
+    jvm.org.apache.spark.util.Utils.classForName.side_effect = missing
+    jvm.java.lang.Class.forName.side_effect = RuntimeError("b")
+    with pytest.raises(RuntimeError, match="b"):
+        iceberg_jar_present(MagicMock(_jvm=jvm))
+
+
 def test_jaccard_df_cap_bounds_hot_shingle(spark):
     """One shingle shared by D docs yields D·(D-1)/2 candidate pairs — the
     max_df cap drops it from candidate generation; pairs sharing only the

@@ -449,6 +449,8 @@ def test_engine_redirect_and_trap_gates(spark, tmp_path_factory):
     assert met_on.n_redirected.sum() >= 1
     assert met_on.n_redirect_loops.sum() >= 1
     assert met_on.n_trap_dropped.sum() >= 30
+    assert met_on.n_redirect_loops.sum() == (lin_on.stage == "redirect_loop").sum()
+    assert met_on.n_trap_dropped.sum() == (lin_on.stage == "trap").sum()
     # the chain's landing page url reached the candidate stage under its
     # FINAL name (enqueued or deduped against the seen set — not lost)
     final_target = chain_root.rsplit("/r", 1)[0] + "/p" + \
@@ -568,11 +570,10 @@ def test_adaptive_politeness(spark, tmp_path_factory):
                           adaptive_delay_factor=40.0)
         st = run_crawl(spark, d, str(tmp_path_factory.mktemp(f"ap_{flag}")),
                        cfg, max_rounds=2)
-        out = {}
-        for r in range(st.read_manifest()["last_round"] + 1):
-            for row in st.read("host_metrics", r).collect():
-                out[(row["host"], row["round"])] = row["n_scheduled"]
-        return out
+        # per-(host, round) schedules: results has one row per scheduled url
+        res = st.read_all("results", st.read_manifest()["last_round"])
+        return {(row["host"], row["round"]): row["count"]
+                for row in res.groupBy("host", "round").count().collect()}
 
     on, off = sched(True), sched(False)
     assert all(on.get(k, 0) <= v for k, v in off.items())
@@ -667,14 +668,14 @@ def test_engine_all_flags_combined(spark, tmp_path_factory):
                           use_sitemaps=True, adaptive_politeness=True)
         state = run_crawl(spark, d, root, cfg, max_rounds=3)
         last = state.read_manifest()["last_round"]
-        lin, met = None, None
+        lin = None
         for r in range(last + 1):
             if state.exists("lineage", r):
                 part = state.read("lineage", r)
                 lin = part if lin is None else lin.unionByName(part)
-            if state.exists("host_metrics", r):
-                part = state.read("host_metrics", r)
-                met = part if met is None else met.unionByName(part)
+        # per-(host, round) schedules: results has one row per scheduled url
+        met = state.read_all("results", last).groupBy("host", "round").agg(
+            F.count(F.lit(1)).alias("n_scheduled"))
         seed_lin = state.read("seed_lineage", 0).toPandas()
         return lin.toPandas(), met.toPandas(), seed_lin
 
