@@ -3,7 +3,7 @@
 At 100 TB the pages table is the single largest exchange risk: every
 crawl round semi-joins the scheduled url-set against it. Rounds small
 enough to broadcast avoid the exchange already (operators/fetch.py);
-rounds above ``fetch_broadcast_max_urls`` fall back to a shuffle semi
+rounds above ``crawl.FETCH_BROADCAST_MAX_URLS`` fall back to a shuffle semi
 join — and THAT shuffle is the one bucketing removes. A pages table
 written with ``bucketBy(N, "url")`` + ``sortBy("url")`` is physically
 pre-partitioned and pre-sorted on the join key, so the join planner

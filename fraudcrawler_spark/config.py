@@ -82,15 +82,6 @@ class CrawlConfig:
     seen_partitions: int = SEEN_PARTITIONS
     seen_capacity_per_part: int = 1 << 16
     seen_filter_kind: str = "bloom"  # or "cuckoo" (frontier/cuckoo.py)
-    # broadcast the per-round scheduled url-set into the fetch semi-join
-    # (html never shuffles). Set False for rounds too large to broadcast —
-    # the semi join then shuffles url keys only (operators/fetch.py).
-    fetch_broadcast_urls: bool = True
-    # auto-fallback guard: even with the flag on, rounds scheduling more
-    # urls than this go through the shuffle semi-join (the crawl loop
-    # already knows the scheduled count — no extra job). 2M urls ≈ 160 MB
-    # broadcast; far below Spark's 8 GB hard cap but a sane driver bound.
-    fetch_broadcast_max_urls: int = 2_000_000
     # recrawl/TTL: urls claimed k rounds ago are retired from the seen
     # store and re-enqueued (requires seen_filter_kind='cuckoo' — the
     # deletion-capable backend; Bloom refuses). None = never recrawl.
@@ -114,7 +105,7 @@ class CrawlConfig:
     # conformance_graph.q_pagerank_priority). Keep the mode fixed across
     # resume: it parameterizes frontier ORDER, like host_budget.
     priority_mode: str = "depth"
-    # candidate-stage 3xx resolution (conformance_net.resolve_redirect_map
+    # candidate-stage 3xx resolution (functions/urls.resolve_redirect_map
     # over the corpus redirects table, computed once per crawl): candidate
     # urls that are redirect sources are rewritten to their final landing
     # url before dedup/enqueue; loops/over-long chains drop with lineage
@@ -122,18 +113,17 @@ class CrawlConfig:
     resolve_redirects: bool = False
     # adaptive crawler-trap suppression: mine (host, template) volume from
     # THIS round's candidate stream (template = query values→V, digit
-    # runs→N) and drop candidates whose template exploded — ≥ trap_min_urls
-    # distinct urls across ≥ trap_min_var variable segments (single-
-    # variable article spaces are exempt). Lineage stage 'trap'.
+    # runs→N) and drop candidates whose template exploded — ≥
+    # TRAP_MIN_URLS distinct urls across ≥ TRAP_MIN_VAR variable segments
+    # (frontier/crawl.py; single-variable article spaces are exempt).
+    # Lineage stage 'trap'.
     trap_gate: bool = False
-    trap_min_urls: int = 25
-    trap_min_var: int = 2
     # seed frontier_0 from the corpus sitemaps table too (sources/
     # sitemap.parse_sitemaps): sitemap-listed urls enter at seed priority
     # after the same country/excluded gates, lineage stage 'sitemap'.
     # Off by default — golden traces predate it.
     use_sitemaps: bool = False
-    # latency-adaptive politeness (conformance_net.host_latency_stats over
+    # latency-adaptive politeness (politeness.host_latency_stats over
     # the corpus fetch_log, computed once per crawl): each host's
     # effective crawl delay becomes max(robots delay, clip(factor·p95,
     # 100ms, 10s)), quadrupled (same cap) for hosts whose 5xx rate exceeds

@@ -19,10 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# a crawler abandons a url after this many 3xx hops (browsers stop at
-# ~20; politeness-conscious crawlers at 5-16). Cycles therefore resolve
-# to 'too_many_redirects' instead of looping forever.
-MAX_HOPS = 16
+from fraudcrawler_spark.frontier.politeness import host_latency_stats, robots_from_txt
+from fraudcrawler_spark.functions.urls import (
+    MAX_HOPS,
+    resolve_redirect_map,
+    url_template_expr,
+)
 
 
 def _corpus() -> str:
@@ -35,78 +37,6 @@ def _corpus() -> str:
 # redirect_resolve — functional-graph pointer doubling
 # --------------------------------------------------------------------------
 
-def _absolutize(loc, src):
-    """3xx Location headers may be host-relative; resolve against the
-    source url's host (RFC 9110 §10.2.2)."""
-    host = F.regexp_extract(src, r"^https?://([^/]+)", 1)
-    return F.when(
-        loc.startswith("/"), F.concat(F.lit("https://"), host, loc)
-    ).otherwise(loc)
-
-
-def resolve_redirect_map(red: DataFrame) -> DataFrame:
-    """Resolve every redirect source to its final landing url via
-    POINTER DOUBLING: each round composes the partial-resolution map
-    with itself (cur → f(cur)), so a chain of length h settles in
-    ceil(log2(h)) self-joins instead of h sequential lookups — 4 rounds
-    cover MAX_HOPS=16 (2^4 = 16). At 10^10 urls each round is one hash
-    join partitioned by url; the naive per-hop walk would be 16
-    sequential shuffles of the full frontier.
-
-    Input: (src_url, location, …). Output: (src_url, final_url, n_hops,
-    status) with status 'ok' (landed on a non-redirect within MAX_HOPS)
-    or 'too_many_redirects' (cycle or over-long chain; final_url/n_hops
-    NULL — mid-cycle position is not meaningful). Also the engine's
-    frontier preprocessor (frontier/crawl.py candidate stage)."""
-    edges = red.select(
-        F.col("src_url").alias("src"),
-        _absolutize(F.col("location"), F.col("src_url")).alias("cur"),
-    )
-    srcs = edges.select(F.col("src").alias("s2"), F.lit(True).alias("hit"))
-    m = edges.join(srcs, edges["cur"] == srcs["s2"], "left").select(
-        "src",
-        "cur",
-        F.lit(1).cast("long").alias("hops"),
-        F.col("hit").isNull().alias("done"),
-    )
-    rounds = max(1, (MAX_HOPS - 1).bit_length())  # 2^rounds >= MAX_HOPS
-    for _ in range(rounds):
-        # break lineage each round (same discipline as star_components):
-        # without this the self-join doubles the WHOLE plan subtree per
-        # round — 2^rounds - 1 joins in one DAG instead of `rounds`
-        # materialized single-join stages. On a cluster this would be
-        # reliable checkpoint()/a frontier table; local mode uses the
-        # executor-local variant.
-        m = m.localCheckpoint()
-        if m.where(~F.col("done")).isEmpty():
-            break  # every chain terminal — only cycles keep iterating
-        t = m.select(
-            F.col("src").alias("t_src"),
-            F.col("cur").alias("t_cur"),
-            F.col("hops").alias("t_hops"),
-            F.col("done").alias("t_done"),
-        )
-        miss = F.col("t_src").isNull()
-        m = (
-            m.join(t, (m["cur"] == t["t_src"]) & (~m["done"]), "left")
-            .select(
-                "src",
-                F.when(miss, F.col("cur")).otherwise(F.col("t_cur")).alias("cur"),
-                F.when(miss, F.col("hops"))
-                .otherwise(F.col("hops") + F.col("t_hops"))
-                .alias("hops"),
-                F.when(miss, F.col("done")).otherwise(F.col("t_done")).alias("done"),
-            )
-        )
-    ok = F.col("done") & (F.col("hops") <= MAX_HOPS)
-    return m.select(
-        F.col("src").alias("src_url"),
-        F.when(ok, F.col("cur")).alias("final_url"),
-        F.when(ok, F.col("hops")).alias("n_hops"),
-        F.when(ok, F.lit("ok")).otherwise(F.lit("too_many_redirects")).alias("status"),
-    )
-
-
 def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: resolve_redirect_map over the corpus redirects
     table (see that function for semantics and the scale argument)."""
@@ -114,16 +44,6 @@ def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     red = spark.read.parquet(os.path.join(_corpus(), "redirects.parquet"))
     return resolve_redirect_map(red)
-
-
-def url_template_expr(url):
-    """Collapse a url to its trap-mining template: strip scheme+host,
-    query values → 'V', digit runs → 'N'. Shared by q_trap_detect and
-    the engine's candidate gate so the two can never drift."""
-    pathq = F.regexp_replace(url, r"^https?://[^/]+", "")
-    return F.regexp_replace(
-        F.regexp_replace(pathq, r"=[^&]*", "=V"), r"[0-9]+", "N"
-    )
 
 
 def _sql_redirect_resolve() -> str:
@@ -284,39 +204,6 @@ FROM read_parquet('{_corpus_sql_dir()}/media_headers.parquet')
 # host_latency_adapt — observed-latency percentiles → politeness delays
 # --------------------------------------------------------------------------
 
-def host_latency_stats(
-    log: DataFrame,
-    factor: float = 4.0,
-    floor_ms: float = 100.0,
-    cap_ms: float = 10000.0,
-) -> DataFrame:
-    """Per-host fetch statistics the adaptive-politeness policy consumes:
-    exact p50/p95 latency, 5xx error rate, adaptive_delay_ms =
-    ceil(clip(factor·p95, floor, cap)), backoff = (5xx rate > 5%). One
-    hash aggregation keyed by host. Shared by the q_host_latency_adapt
-    conformance entry and the engine's `adaptive_politeness` hook
-    (frontier/crawl.py) so the two can never drift."""
-    adaptive = F.ceil(
-        F.least(
-            F.greatest(F.col("p95_ms") * factor, F.lit(floor_ms)),
-            F.lit(cap_ms),
-        )
-    )
-    return (
-        log.groupBy("host")
-        .agg(
-            F.count("*").alias("n_fetches"),
-            F.round(F.percentile("latency_ms", 0.5), 2).alias("p50_ms"),
-            F.round(F.percentile("latency_ms", 0.95), 2).alias("p95_ms"),
-            F.round(
-                F.avg((F.col("status") >= 500).cast("double")), 4
-            ).alias("err5xx_rate"),
-        )
-        .withColumn("adaptive_delay_ms", adaptive.cast("long"))
-        .withColumn("backoff", F.col("err5xx_rate") > 0.05)
-    )
-
-
 def q_host_latency_adapt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adaptive per-host politeness from the fetch log: exact p50/p95
     latency, 5xx error rate, and a recommended inter-request delay =
@@ -326,8 +213,6 @@ def q_host_latency_adapt(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join against the robots dim (host-level: always tiny
     relative to the fetch log)."""
     import os
-
-    from fraudcrawler_spark.frontier.politeness import robots_from_txt
 
     log = spark.read.parquet(os.path.join(_corpus(), "fetch_log.parquet"))
     agg = host_latency_stats(log)

@@ -37,9 +37,18 @@ from pyspark.sql import functions as F
 from fraudcrawler_spark.config import CrawlConfig, STAGE_COUNTRY
 from fraudcrawler_spark.frontier.bloom import SEEN_HASH_VERSION
 from fraudcrawler_spark.frontier.checkpoint import CrawlState
-from fraudcrawler_spark.frontier.politeness import STAGE_ROBOTS, schedule_status
+from fraudcrawler_spark.frontier.politeness import (
+    STAGE_ROBOTS,
+    host_latency_stats,
+    schedule_status,
+)
 from fraudcrawler_spark.frontier.seen import SeenStore, with_part
-from fraudcrawler_spark.functions.urls import canonical_host_expr, canonical_url_expr
+from fraudcrawler_spark.functions.urls import (
+    canonical_host_expr,
+    canonical_url_expr,
+    resolve_redirect_map,
+    url_template_expr,
+)
 from fraudcrawler_spark.operators.classify_stage import classify_stage
 from fraudcrawler_spark.operators.discover import discover
 from fraudcrawler_spark.operators.fetch import fetch_extract
@@ -49,6 +58,18 @@ from fraudcrawler_spark.session import codegen_compiles, local_df
 STAGE_EXCLUDED = "excluded domain (hard drop)"
 
 FRONTIER_COLS = ["url", "host", "priority", "crawl_depth"]
+
+# a round scheduling at most this many urls broadcasts its url-set into
+# the fetch semi-join (html never shuffles); larger rounds shuffle url
+# keys only (operators/fetch.py). 2M urls ≈ 160 MB broadcast: far below
+# Spark's 8 GB hard cap but a sane driver bound.
+FETCH_BROADCAST_MAX_URLS = 2_000_000
+
+# trap gate (config.trap_gate): a (host, template) cell is a trap when it
+# holds at least TRAP_MIN_URLS distinct urls across at least TRAP_MIN_VAR
+# variable segments
+TRAP_MIN_URLS = 25
+TRAP_MIN_VAR = 2
 
 
 def _nc(rows: int) -> int | None:
@@ -184,12 +205,13 @@ def init_crawl(
     return state
 
 
-def _url_state(state: CrawlState, upto: int) -> DataFrame | None:
+def _url_state(state: CrawlState, upto: int,
+               ret: DataFrame | None) -> DataFrame | None:
     """Per-url recrawl state as of round ``upto``: ``(part, url,
     last_claim, last_retire)`` from ONE max-aggregation over the claim
-    and retire histories (``last_retire`` is null for a url never
-    retired). Every TTL fact derives from it: see ``_is_seen`` and
-    ``_recrawl_due``."""
+    history and ``ret``, the retire history ``state.read_all("retired",
+    upto)`` (``last_retire`` is null for a url never retired). Every TTL
+    fact derives from it: see ``_is_seen`` and ``_recrawl_due``."""
     seen = state.read_all("seen", upto)
     if seen is None:
         return None
@@ -197,7 +219,6 @@ def _url_state(state: CrawlState, upto: int) -> DataFrame | None:
         "part", "url", "claim_round",
         F.lit(None).cast("int").alias("retire_round"),
     )
-    ret = state.read_all("retired", upto)
     if ret is not None:
         hist = hist.unionByName(ret.select("url", "retire_round"),
                                 allowMissingColumns=True)
@@ -225,10 +246,11 @@ def _effective_seen(state: CrawlState, upto: int):
     retire ever written (TTL off, or before the first expiry) this is the
     plain scan of the claim deltas, no aggregation; otherwise it is the
     urls ``_url_state`` marks seen."""
-    if state.read_all("retired", upto) is None:
+    ret = state.read_all("retired", upto)
+    if ret is None:
         seen = state.read_all("seen", upto)
         return None if seen is None else seen.select("part", "url")
-    return _url_state(state, upto).where(_is_seen()).select("part", "url")
+    return _url_state(state, upto, ret).where(_is_seen()).select("part", "url")
 
 
 def _load_seen(spark: SparkSession, state: CrawlState, upto: int,
@@ -291,7 +313,8 @@ def _recrawl_due(
     k = config.recrawl_after_rounds
     if round_no < k:
         return None
-    st = _url_state(state, round_no - 1)
+    st = _url_state(state, round_no - 1,
+                    state.read_all("retired", round_no - 1))
     if st is None:
         return None
     base = float(k)
@@ -442,13 +465,8 @@ def run_round(
         scheduled.withColumn("filtered", F.lit(False))
         .withColumn("filtered_at_stage", F.lit(None).cast("string"))
     )
-    # auto-fallback: a round scheduling more urls than the broadcast bound
-    # must NOT rely on a static flag (10^10-url rounds would OOM the
-    # driver) — the scheduled count is already in hand, so decide per round
-    bcast = (
-        config.fetch_broadcast_urls
-        and n_scheduled <= config.fetch_broadcast_max_urls
-    )
+    # the scheduled count is already in hand: decide per round
+    bcast = n_scheduled <= FETCH_BROADCAST_MAX_URLS
     fetched = fetch_extract(items, tables["pages"],
                             threshold=config.probability_threshold,
                             broadcast_urls=bcast)
@@ -567,13 +585,11 @@ def run_round(
     # drop their members before dedup/enqueue. One extra aggregation over
     # data already checkpointed; the trap dim joins back on the same
     # (host, template) key. Single-variable templates are exempt, so a
-    # host's real article space never trips it (conformance_net semantics,
-    # shared via url_template_expr).
+    # host's real article space never trips it (url_template_expr, shared
+    # with the oracled trap_detect entry).
     n_trap_dropped = 0
     trap_dropped = None
     if config.trap_gate:
-        from fraudcrawler_spark.conformance_net import url_template_expr
-
         expanded = expanded.withColumn(
             "_template", url_template_expr(F.col("url"))
         )
@@ -584,8 +600,8 @@ def run_round(
             expanded.groupBy("host", "_template")
             .agg(F.countDistinct("url").alias("_n_urls"))
             .where(
-                (F.col("_n_urls") >= config.trap_min_urls)
-                & (n_var >= config.trap_min_var)
+                (F.col("_n_urls") >= TRAP_MIN_URLS)
+                & (n_var >= TRAP_MIN_VAR)
             )
             .select("host", "_template", F.lit(True).alias("_trap"))
         )
@@ -698,13 +714,11 @@ def adaptive_robots(
     100ms, 10s)), quadrupled — same 10s cap — for hosts whose 5xx rate
     exceeds 5%. cell_budget's by_delay bound then shrinks slow/erroring
     hosts' per-round schedule automatically. Shares
-    conformance_net.host_latency_stats with the oracled
-    host_latency_adapt entry, so engine policy and conformance entry can
-    never drift. Hosts absent from the fetch log keep their robots-only
-    delay; with no robots dim at all the adaptive delays become the dim
-    (empty disallow lists)."""
-    from fraudcrawler_spark.conformance_net import host_latency_stats
-
+    politeness.host_latency_stats with the oracled host_latency_adapt
+    entry, so engine policy and conformance entry can never drift. Hosts
+    absent from the fetch log keep their robots-only delay; with no
+    robots dim at all the adaptive delays become the dim (empty disallow
+    lists)."""
     stats = host_latency_stats(fetch_log, factor=factor).select(
         "host",
         F.least(
@@ -753,8 +767,6 @@ def run_crawl(
                 "resolve_redirects=True but the corpus has no "
                 "redirects.parquet"
             )
-        from fraudcrawler_spark.conformance_net import resolve_redirect_map
-
         # pointer-doubled once per crawl (log2(MAX_HOPS) self-joins),
         # materialized, then reused by every round's candidate join
         tables["_redirect_map"] = resolve_redirect_map(

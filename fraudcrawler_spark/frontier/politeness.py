@@ -31,7 +31,7 @@ STAGE_ROBOTS = "robots disallow"
 def cell_budget(host_budget: int, salt_shards: int, crawl_delay_ms: int | None,
                 round_ms: int = 60_000) -> int:
     """Per-cell token budget — the Python twin of the Column expression in
-    ``schedule`` (used by the trace simulator; keep both in lockstep)."""
+    ``schedule_status`` (used by the trace simulator; keep both in lockstep)."""
     per_cell = math.ceil(host_budget / salt_shards)
     by_delay = math.ceil(round_ms / max(crawl_delay_ms or 1, 1) / salt_shards)
     return max(1, min(per_cell, by_delay))
@@ -122,6 +122,39 @@ def robots_from_txt(raw: DataFrame, user_agent: str = "*") -> DataFrame:
     )
 
 
+def host_latency_stats(
+    log: DataFrame,
+    factor: float = 4.0,
+    floor_ms: float = 100.0,
+    cap_ms: float = 10000.0,
+) -> DataFrame:
+    """Per-host fetch statistics the adaptive-politeness policy consumes:
+    exact p50/p95 latency, 5xx error rate, adaptive_delay_ms =
+    ceil(clip(factor·p95, floor, cap)), backoff = (5xx rate > 5%). One
+    hash aggregation keyed by host. Shared by the q_host_latency_adapt
+    conformance entry and the engine's `adaptive_politeness` hook
+    (frontier/crawl.py) so the two can never drift."""
+    adaptive = F.ceil(
+        F.least(
+            F.greatest(F.col("p95_ms") * factor, F.lit(floor_ms)),
+            F.lit(cap_ms),
+        )
+    )
+    return (
+        log.groupBy("host")
+        .agg(
+            F.count("*").alias("n_fetches"),
+            F.round(F.percentile("latency_ms", 0.5), 2).alias("p50_ms"),
+            F.round(F.percentile("latency_ms", 0.95), 2).alias("p95_ms"),
+            F.round(
+                F.avg((F.col("status") >= 500).cast("double")), 4
+            ).alias("err5xx_rate"),
+        )
+        .withColumn("adaptive_delay_ms", adaptive.cast("long"))
+        .withColumn("backoff", F.col("err5xx_rate") > 0.05)
+    )
+
+
 def robots_flag(frontier: DataFrame, robots: DataFrame | None) -> DataFrame:
     """Flag urls whose path starts with a disallowed prefix for their host.
 
@@ -197,21 +230,4 @@ def schedule_status(
     )
     return ranked.withColumn("sched_status", status).drop(
         "_rn", "_cell_budget", "salt", "crawl_delay_ms", "robots_blocked"
-    )
-
-
-def schedule(
-    frontier: DataFrame,
-    robots: DataFrame | None,
-    host_budget: int,
-    salt_shards: int = 4,
-    round_ms: int = 60_000,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(scheduled, deferred, blocked) — convenience slicing of
-    ``schedule_status`` for callers that don't manage materialization."""
-    st = schedule_status(frontier, robots, host_budget, salt_shards, round_ms)
-    return (
-        st.where(F.col("sched_status") == "scheduled").drop("sched_status"),
-        st.where(F.col("sched_status") == "deferred").drop("sched_status"),
-        st.where(F.col("sched_status") == "blocked").drop("sched_status"),
     )

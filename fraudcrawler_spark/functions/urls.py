@@ -14,6 +14,10 @@ Two implementations:
   for byte parity with the reference on adversarial inputs (userinfo,
   ports, IPv6). The hot path uses the expression; tests pin expr == udf
   on corpus-shaped urls and udf == reference semantics everywhere.
+
+Also the crawl's candidate-stage url transforms: ``url_template_expr``
+(the trap gate's template) and ``resolve_redirect_map`` (3xx chains to
+their landing url).
 """
 
 from __future__ import annotations
@@ -21,13 +25,18 @@ from __future__ import annotations
 from urllib.parse import urlparse
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 # host = chars up to first of / : ? #, after optional scheme and userinfo
 _HOST_PATTERN = r"^(?:https?://)?(?:[^/@:?#]*@)?([^/@:?#]+)"
+
+# a crawler abandons a url after this many 3xx hops (browsers stop at
+# ~20; politeness-conscious crawlers at 5-16). Cycles therefore resolve
+# to 'too_many_redirects' instead of looping forever.
+MAX_HOPS = 16
 
 
 def canonical_host_expr(url: Column) -> Column:
@@ -161,3 +170,85 @@ def normalize_url_py(url: str) -> str:
         if p != "" and not re.match(_TRACKING_PARAM_RE, p.lower())
     )
     return path if not kept else path + "?" + "&".join(kept)
+
+
+def url_template_expr(url):
+    """Collapse a url to its trap-mining template: strip scheme+host,
+    query values → 'V', digit runs → 'N'. Shared by q_trap_detect and
+    the engine's candidate gate so the two can never drift."""
+    pathq = F.regexp_replace(url, r"^https?://[^/]+", "")
+    return F.regexp_replace(
+        F.regexp_replace(pathq, r"=[^&]*", "=V"), r"[0-9]+", "N"
+    )
+
+
+def _absolutize(loc, src):
+    """3xx Location headers may be host-relative; resolve against the
+    source url's host (RFC 9110 §10.2.2)."""
+    host = F.regexp_extract(src, r"^https?://([^/]+)", 1)
+    return F.when(
+        loc.startswith("/"), F.concat(F.lit("https://"), host, loc)
+    ).otherwise(loc)
+
+
+def resolve_redirect_map(red: DataFrame) -> DataFrame:
+    """Resolve every redirect source to its final landing url via
+    POINTER DOUBLING: each round composes the partial-resolution map
+    with itself (cur → f(cur)), so a chain of length h settles in
+    ceil(log2(h)) self-joins instead of h sequential lookups — 4 rounds
+    cover MAX_HOPS=16 (2^4 = 16). At 10^10 urls each round is one hash
+    join partitioned by url; the naive per-hop walk would be 16
+    sequential shuffles of the full frontier.
+
+    Input: (src_url, location, …). Output: (src_url, final_url, n_hops,
+    status) with status 'ok' (landed on a non-redirect within MAX_HOPS)
+    or 'too_many_redirects' (cycle or over-long chain; final_url/n_hops
+    NULL — mid-cycle position is not meaningful). Also the engine's
+    frontier preprocessor (frontier/crawl.py candidate stage)."""
+    edges = red.select(
+        F.col("src_url").alias("src"),
+        _absolutize(F.col("location"), F.col("src_url")).alias("cur"),
+    )
+    srcs = edges.select(F.col("src").alias("s2"), F.lit(True).alias("hit"))
+    m = edges.join(srcs, edges["cur"] == srcs["s2"], "left").select(
+        "src",
+        "cur",
+        F.lit(1).cast("long").alias("hops"),
+        F.col("hit").isNull().alias("done"),
+    )
+    rounds = max(1, (MAX_HOPS - 1).bit_length())  # 2^rounds >= MAX_HOPS
+    for _ in range(rounds):
+        # break lineage each round (same discipline as star_components):
+        # without this the self-join doubles the WHOLE plan subtree per
+        # round — 2^rounds - 1 joins in one DAG instead of `rounds`
+        # materialized single-join stages. On a cluster this would be
+        # reliable checkpoint()/a frontier table; local mode uses the
+        # executor-local variant.
+        m = m.localCheckpoint()
+        if m.where(~F.col("done")).isEmpty():
+            break  # every chain terminal — only cycles keep iterating
+        t = m.select(
+            F.col("src").alias("t_src"),
+            F.col("cur").alias("t_cur"),
+            F.col("hops").alias("t_hops"),
+            F.col("done").alias("t_done"),
+        )
+        miss = F.col("t_src").isNull()
+        m = (
+            m.join(t, (m["cur"] == t["t_src"]) & (~m["done"]), "left")
+            .select(
+                "src",
+                F.when(miss, F.col("cur")).otherwise(F.col("t_cur")).alias("cur"),
+                F.when(miss, F.col("hops"))
+                .otherwise(F.col("hops") + F.col("t_hops"))
+                .alias("hops"),
+                F.when(miss, F.col("done")).otherwise(F.col("t_done")).alias("done"),
+            )
+        )
+    ok = F.col("done") & (F.col("hops") <= MAX_HOPS)
+    return m.select(
+        F.col("src").alias("src_url"),
+        F.when(ok, F.col("cur")).alias("final_url"),
+        F.when(ok, F.col("hops")).alias("n_hops"),
+        F.when(ok, F.lit("ok")).otherwise(F.lit("too_many_redirects")).alias("status"),
+    )

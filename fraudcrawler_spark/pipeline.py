@@ -106,7 +106,6 @@ def run_pipeline(
     )
     items = dedup_flag(items, order_by=[F.col("priority"), F.col("serp_rank")], seen=seen)
     items = fetch_extract(items, t["pages"], threshold=config.probability_threshold,
-                          keep_links=False,
-                          broadcast_urls=config.fetch_broadcast_urls)
+                          keep_links=False)
     items = classify_stage(items, prompts)
     return items.select(*RESULT_COLUMNS)

@@ -356,3 +356,44 @@ def test_empty_seed_crawl(spark, tmp_path_factory):
     state = run_crawl(spark, d, root, CFG, max_rounds=3)
     assert state.read_manifest()["last_round"] == -1
     assert state.read("frontier", 0).count() == 0
+
+
+def test_crawl_path_imports_no_conformance_catalog():
+    """The crawl path reads on its own: no module in it imports the
+    conformance catalog or the registry, function-local imports included.
+    The oracled entries that share the crawl's helpers import them from
+    the crawl path, so they check the engine's own code."""
+    import ast
+    import pathlib
+
+    from fraudcrawler_spark import conformance_net
+    from fraudcrawler_spark.frontier import politeness
+    from fraudcrawler_spark.functions import urls
+
+    pkg = pathlib.Path(urls.__file__).parents[1]
+    paths = [
+        *(pkg / "frontier").glob("*.py"),
+        *(pkg / "operators").glob("*.py"),
+        *(pkg / "functions").glob("*.py"),
+        *(pkg / f"{m}.py" for m in (
+            "pipeline", "catalog", "session", "config", "datagen")),
+    ]
+    bad = []
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            else:
+                continue
+            bad += [
+                f"{path.relative_to(pkg)}:{node.lineno} {n}" for n in names
+                if n.startswith("fraudcrawler_spark.conformance")
+                or n == "fraudcrawler_spark.registry"
+            ]
+    assert len(paths) > 20 and not bad, bad
+
+    assert conformance_net.url_template_expr is urls.url_template_expr
+    assert conformance_net.resolve_redirect_map is urls.resolve_redirect_map
+    assert conformance_net.host_latency_stats is politeness.host_latency_stats

@@ -277,58 +277,3 @@ def test_jaccard_df_cap_bounds_hot_shingle(spark):
     # from common but kept in set sizes): common=1, na=nb=2 → 1/3
     j = {(r["a"], r["b"]): r["jaccard"] for r in capped.collect()}
     assert abs(j[(100, 101)] - round(1 / 3, 4)) < 1e-9
-
-
-def test_bench_fold_run_history(tmp_path, monkeypatch):
-    """fold_run_history: a fully-contaminated run is recorded but never
-    headlines over a clean run in the history; raw numbers stay visible
-    with provenance flags."""
-    import json
-
-    import bench
-
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    with open(tmp_path / "BENCH_FULL.json", "w") as f:
-        json.dump({"history": [
-            {"source": "bench_main", "core_4n_urls_per_sec": 40000.0,
-             "best_pair_efficiency": 0.9,
-             "all_cycles_contaminated": False},
-        ]}, f)
-
-    scaling = {
-        "core_n_urls_per_sec": 9000.0,
-        "core_4n_urls_per_sec": 8000.0,
-        "best_pair_efficiency": 0.2,
-        "scaling_efficiency": 0.2,
-        "core_cycles": [{"contaminated": True}, {"contaminated": True}],
-        "compute_control": {"efficiency": 0.8},
-    }
-    out = bench.fold_run_history(scaling, "bench_main")
-    assert out["core_4n_urls_per_sec"] == 40000.0
-    assert out["core_4n_urls_per_sec_this_run"] == 8000.0
-    assert out["best_pair_efficiency"] == 0.9
-    assert out["best_pair_efficiency_this_run"] == 0.2
-    assert out["this_run_all_cycles_contaminated"] is True
-    assert out["headline_from_history"] is True
-    assert len(out["history"]) == 2
-
-    # a CLEAN better run headlines itself and history grows
-    scaling2 = {
-        "core_n_urls_per_sec": 16000.0,
-        "core_4n_urls_per_sec": 50000.0,
-        "best_pair_efficiency": 0.95,
-        "scaling_efficiency": 0.8,
-        "core_cycles": [{"contaminated": False}],
-        "compute_control": {"efficiency": 0.9},
-    }
-    out2 = bench.fold_run_history(scaling2, "scaling_retry")
-    assert out2["core_4n_urls_per_sec"] == 50000.0
-    assert "core_4n_urls_per_sec_this_run" not in out2
-    assert out2["best_pair_efficiency"] == 0.95
-
-    # compact line with the new fields still fits the capture window
-    line = bench.compact_headline_line({"q1": 1.0}, out, 0.1)
-    assert len(line) < 1800
-    parsed = json.loads(line)
-    assert parsed["value"] == 40000.0
-    assert parsed["core_4n_urls_per_sec_this_run"] == 8000.0

@@ -726,35 +726,3 @@ def test_star_components_singletons_and_sizes(spark):
         assert rows[d]["cluster_id"] == d and rows[d]["cluster_size"] == 1
         assert rows[d]["is_canonical"]
     assert rows[2]["is_canonical"] is False
-
-
-def test_bench_compact_line_fits_capture():
-    """r3 defect 2 regression pin: the bench's final stdout line must
-    parse as JSON and fit the driver's ~2 KB output-tail capture even
-    with a full 92-query timing dict and worst-case scaling record."""
-    import json
-
-    import bench
-
-    timings = {f"query_name_number_{i:03d}": 123.456 for i in range(92)}
-    scaling = {
-        "core_n_urls_per_sec": 16321.2, "core_4n_urls_per_sec": 45123.9,
-        "scaling_efficiency": 0.723, "best_pair_efficiency": 0.791,
-        "scaling_efficiency_vs_bandwidth": 1.0,
-        "scaling_efficiency_vs_host_capacity": 0.872,
-        "compute_control": {"efficiency": 0.881},
-        "full_round_local32_urls_per_sec": 3274.2,
-    }
-    line = bench.compact_headline_line(timings, scaling, 0.1)
-    assert len(line) <= 1800
-    d = json.loads(line)
-    assert d["value"] == 45123.9
-    assert d["compute_control_efficiency"] == 0.881
-    assert d.get("queries_truncated_see_detail") is True  # 92 > fit → top-20
-    assert len(d["queries"]) == 20
-
-    small = {f"q{i}": 1.0 for i in range(20)}
-    line2 = bench.compact_headline_line(small, scaling, 0.1)
-    d2 = json.loads(line2)
-    assert "queries_truncated_see_detail" not in d2
-    assert len(d2["queries"]) == 20

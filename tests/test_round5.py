@@ -737,47 +737,6 @@ def test_pagerank_nonconstant(spark):
     assert abs(sum(vals) / len(vals) - 1.0) < 1e-3
 
 
-def test_scaling_regime_isolation(tmp_path, monkeypatch):
-    """Late-r5 regime guard: fold_run_history's promotion pool only
-    considers SAME-REGIME history (a clean 1→4 pair must never inflate
-    the 2→8 headline), and entries predating the regime field count as
-    the historical default N=2."""
-    import json as _json
-
-    import bench
-
-    full = tmp_path / "BENCH_FULL.json"
-    # history: a clean legacy entry (no cores field → N=2) with a high
-    # pair, and a clean 1→4 entry with a higher one
-    full.write_text(_json.dumps({"history": [
-        {"source": "bench_main", "core_4n_urls_per_sec": 40000.0,
-         "best_pair_efficiency": 0.9, "all_cycles_contaminated": False},
-        {"source": "scaling_retry", "core_n_cores": 1,
-         "core_4n_urls_per_sec": 99999.0, "best_pair_efficiency": 0.99,
-         "all_cycles_contaminated": False},
-    ]}))
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-
-    scaling = {"core_n_cores": 2, "core_4n_cores": 8,
-               "core_n_urls_per_sec": 10000.0,
-               "core_4n_urls_per_sec": 30000.0,
-               "best_pair_efficiency": 0.75,
-               "core_cycles": [{"contaminated": False}]}
-    out = bench.fold_run_history(scaling, "bench_main")
-    # promoted from the SAME-regime (legacy N=2) entry — 0.9 / 40k, not
-    # the 1→4 entry's 0.99 / 99999
-    assert out["best_pair_efficiency"] == 0.9
-    assert out["core_4n_urls_per_sec"] == 40000.0
-
-    scaling14 = {"core_n_cores": 1, "core_4n_cores": 4,
-                 "core_n_urls_per_sec": 8000.0,
-                 "core_4n_urls_per_sec": 26000.0,
-                 "best_pair_efficiency": 0.8,
-                 "core_cycles": [{"contaminated": False}]}
-    out14 = bench.fold_run_history(scaling14, "scaling_retry")
-    assert out14["best_pair_efficiency"] == 0.99  # same-regime promotion
-
-
 def test_change_rate_semantics(spark):
     """Cho & Garcia-Molina estimator pin beyond the oracle compare:
     every change-count class 0..5 is populated by the synthetic history,
