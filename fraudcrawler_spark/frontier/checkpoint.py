@@ -4,17 +4,24 @@ No Iceberg runtime jar ships in this sandbox (SURVEY.md §7 risk 4), so
 this layer emulates the snapshot semantics the engine needs on plain
 parquet + an atomic JSON manifest: every completed round commits
 
+    results/round=K/       result rows of round K (written mid-round: the
+                           link expansion reads them back)
+    digests/round=K/       per-url content digests (adaptive recrawl only)
+    -- written together at the round's commit:
     seen/round=K/          urls claimed in round K (url, part, claim_round)
     retired/round=K/       urls retired for recrawl in round K (TTL on only)
     bloom/round=K/         seen-filter segment snapshot AFTER round K
     frontier/round=K+1/    the next round's frontier
-    results/round=K/       result rows of round K
-    digests/round=K/       per-url content digests (adaptive recrawl only)
     lineage/round=K/       per-url provenance (url, stage, src) for round K
     metrics/round=K/       one row of round counters and phase times
                            (n_codegen_compiles: classes the round compiled)
-    seed_lineage/round=0/  discovery-flagged seeds (written by init_crawl)
+    -- then:
     manifest.json          {"last_round": K, ...}   ← the commit point
+
+    seed_lineage/round=0/  discovery-flagged seeds (written by init_crawl)
+
+Round K+1 loads its seen store from committed round K's seen, retired
+and bloom tables, as a resume does.
 
 Per-host schedules are not a table: results holds one row per scheduled
 url with its host and round, so ``results.groupBy("round", "host")``

@@ -9,20 +9,26 @@ anyway (``_checkpoint``): no job runs only to count.
 
 Round K dataflow (all DataFrame ops; barriers land on shuffles):
 
-  [TTL on] seen ∪ retired history ──per-url (last_claim, last_retire)──►
-      due urls ──retire from the store──► retired_K delta; due urls ∪ frontier_K
+  committed round K-1 ──► the round's seen store (segments + exact table)
+  [TTL on] seen ∪ retired history ──per-url (last_claim, last_retire),
+      checkpointed once──► exact table + due urls ──retire (recorded)──►
+      due urls ∪ frontier_K
   frontier_K ──schedule (robots + politeness cells)──► scheduled/deferred/blocked
-  scheduled ∪ blocked ──SeenStore claim (insert-only; no url is already
-      seen, checked against the exact table)──► seen_K delta + segments
+  scheduled ∪ blocked ──SeenStore claim (insert-only, recorded; no url is
+      already seen, checked against the exact table)──► seen_K delta
   scheduled ──fetch join on pages ──extract kernel──► results_K (+ prob flag + classify)
   results_K(unflagged) ──explode links──canonicalize──country/excluded──►
-      candidates ──minus seen──dedup──► frontier_{K+1} = deferred ∪ candidates
+      candidates ──ONE segment pass (delete retired, insert claims, probe
+      candidates)──minus seen──dedup──► frontier_{K+1} = deferred ∪ candidates
+  commit: seen_K, retired_K, bloom_K, lineage_K, metrics_K, frontier_{K+1},
+      then the manifest
 
 Scale notes: the fetch join is an equi-join on url against the pages
 table (SMJ at scale; co-partitioned if pages is bucketed by crc32(url));
-link expansion shuffles once on url for dedup; the claim insert and the
-candidate probe are each one cogroup exchange on the segment partition
-key. html:binary is only read inside the fetch join's projection.
+link expansion shuffles once on url for dedup; the round's retires,
+claims and candidate probes are one cogroup exchange on the segment
+partition key. html:binary is only read inside the fetch join's
+projection.
 """
 
 from __future__ import annotations
@@ -254,10 +260,12 @@ def _effective_seen(state: CrawlState, upto: int):
 
 
 def _load_seen(spark: SparkSession, state: CrawlState, upto: int,
-               config: CrawlConfig) -> SeenStore:
-    """Build the SeenStore for (re)start — ADOPTING the manifest's persisted
-    partitioning/bloom params over the caller's config when they disagree
-    (the persisted segments are only valid under the params that wrote them)."""
+               config: CrawlConfig, seen: DataFrame | None = None) -> SeenStore:
+    """The seen store as committed at round ``upto``: its segments and
+    exact table (``seen`` when the caller built it, else
+    ``_effective_seen``). The manifest's persisted partitioning/filter
+    params win over the caller's config (the persisted segments are only
+    valid under the params that wrote them)."""
     manifest = state.read_manifest()
     partitions = int(manifest.get("seen_partitions", config.seen_partitions))
     capacity = int(
@@ -276,16 +284,17 @@ def _load_seen(spark: SparkSession, state: CrawlState, upto: int,
                 "Restart the crawl (or rebuild the seen store from the "
                 "persisted seen url table)."
             )
-        segs = state.read("bloom", upto)
-        store.load(segs, _effective_seen(state, upto))
+        store.load(state.read("bloom", upto),
+                   _effective_seen(state, upto) if seen is None else seen)
     return store
 
 
-def _recrawl_due(
+def _recrawl_state(
     state: CrawlState, round_no: int, config: CrawlConfig
 ) -> DataFrame | None:
-    """The urls round ``round_no`` retires: seen, and last claimed at
-    least ``period`` rounds ago (``last_claim <= round_no - period``).
+    """``_url_state(round_no - 1)`` plus ``due``, true for the urls round
+    ``round_no`` retires: seen, and last claimed at least ``period``
+    rounds ago (``last_claim <= round_no - period``).
 
     ``period`` is k = ``config.recrawl_after_rounds``. With
     ``config.adaptive_recrawl`` it is the url's PERSONAL period, the base
@@ -308,10 +317,11 @@ def _recrawl_due(
     a second cuckoo delete of the same fingerprint, which can evict a
     colliding cohabitant's entry and spuriously re-fetch that other url.
 
-    Returns None before round k: no period is shorter than k.
+    Returns None with TTL off, and before round k: no period is shorter
+    than k.
     """
     k = config.recrawl_after_rounds
-    if round_no < k:
+    if k is None or round_no < k:
         return None
     st = _url_state(state, round_no - 1,
                     state.read_all("retired", round_no - 1))
@@ -350,9 +360,17 @@ def _recrawl_due(
                 ),
             )
         )
-    return st.where(
-        _is_seen() & (F.col("last_claim") <= F.lit(round_no) - period)
-    ).select("url")
+    return st.withColumn(
+        "due", _is_seen() & (F.col("last_claim") <= F.lit(round_no) - period)
+    )
+
+
+def _recrawl_due(
+    state: CrawlState, round_no: int, config: CrawlConfig
+) -> DataFrame | None:
+    """The urls round ``round_no`` retires (``_recrawl_state``'s ``due``)."""
+    st = _recrawl_state(state, round_no, config)
+    return None if st is None else st.where(F.col("due")).select("url")
 
 
 def run_round(
@@ -361,11 +379,12 @@ def run_round(
     round_no: int,
     config: CrawlConfig,
     tables: dict[str, DataFrame],
-    store: SeenStore,
 ) -> bool:
     """Execute round ``round_no``; returns False when the frontier is empty.
-    Classifies with ``config.prompts``, into which ``run_crawl`` resolves
-    the corpus prompt dim once per crawl."""
+    The round loads its seen store once, from committed round
+    ``round_no - 1``, and commits it with its other tables. Classifies with
+    ``config.prompts``, into which ``run_crawl`` resolves the corpus prompt
+    dim once per crawl."""
     t0 = time.time()
     compiles0 = codegen_compiles(spark)
     phase: dict[str, float] = {}
@@ -378,35 +397,34 @@ def run_round(
     tick = [time.time()]
     frontier = state.read("frontier", round_no)
 
-    # --- recrawl/TTL: retire the due urls (_recrawl_due: seen, last claim
-    # at least one period ago; cuckoo backend only — SeenStore.retire
-    # raises on Bloom). Retired urls probe filter-negative again, so
-    # re-enqueueing them into THIS round's frontier makes them fetch
-    # fresh; their re-claim lands in this round's seen delta, which
-    # restarts their period (recurring recrawl). The retire is PERSISTED
-    # as a per-round `retired` delta: _url_state aggregates it with the
-    # claims, so the round-barrier/resume seen reload subtracts it and a
-    # url retired but not yet re-claimed is never due again.
-    if config.recrawl_after_rounds is not None:
-        due = _recrawl_due(state, round_no, config)
-        if due is not None:
-            expired, due_n = _checkpoint(due, n=F.count(F.lit(1)))
-            if due_n["n"] > 0:
-                store.retire(expired)
-                state.write(
-                    "retired", round_no,
-                    expired.withColumn("retire_round", F.lit(round_no)),
-                    ncoalesce=1,
-                )
-                refresh = expired.join(
-                    frontier.select("url"), "url", "left_anti"
-                ).select(
-                    "url",
-                    canonical_host_expr(F.col("url")).alias("host"),
-                    F.lit(0).alias("priority"),
-                    F.lit(0).alias("crawl_depth"),
-                )
-                frontier = frontier.unionByName(refresh.select(*FRONTIER_COLS))
+    # --- the seen store, as committed by round K-1. With TTL on, the
+    # per-url state is checkpointed ONCE: the exact table is its seen
+    # filter, the due urls its `due` slice (cuckoo only — SeenStore.retire
+    # raises on Bloom). Retired urls are re-enqueued into THIS round's
+    # frontier, so they fetch fresh; their re-claim lands in this round's
+    # seen delta, which restarts their period. The `retired` delta is
+    # persisted, so a url retired but not re-claimed is never due again.
+    st, due_n = _recrawl_state(state, round_no, config), {"n": 0}
+    if st is not None:
+        st, due_n = _checkpoint(st, n=F.count_if(F.col("due")))
+    store = _load_seen(
+        spark, state, round_no - 1, config,
+        None if st is None else st.where(_is_seen()).select("part", "url"),
+    )
+    retired = None
+    if due_n["n"] > 0:
+        expired = st.where(F.col("due")).select("url")
+        store.retire(expired)
+        retired = expired.withColumn("retire_round", F.lit(round_no))
+        refresh = expired.join(
+            frontier.select("url"), "url", "left_anti"
+        ).select(
+            "url",
+            canonical_host_expr(F.col("url")).alias("host"),
+            F.lit(0).alias("priority"),
+            F.lit(0).alias("crawl_depth"),
+        )
+        frontier = frontier.unionByName(refresh.select(*FRONTIER_COLS))
     _mark("t_read", tick)
 
     # --- politeness + robots ------------------------------------------------
@@ -429,35 +447,13 @@ def run_round(
     blocked = sched_st.where(F.col("sched_status") == "blocked").drop("sched_status")
     _mark("t_schedule", tick)
 
-    # --- seen claim: insert-only (robots-blocked urls are claimed too, so
-    # they never re-enter the frontier) ---------------------------------------
+    # --- seen claim: insert-only, recorded for the round's one segment
+    # pass (robots-blocked urls are claimed too, so they never re-enter
+    # the frontier). The seen-delta write at the commit runs the claim's
+    # invariant observation.
     claimed = store.probe_and_claim(
         scheduled.select("url").unionByName(blocked.select("url"))
     )
-    _mark("t_probe", tick)
-
-    # persist claimed delta + segments NOW, then reload the store from
-    # parquet — the round barrier that keeps seen-state lineage flat
-    # store.partitions (manifest-adopted), NOT config.seen_partitions — the
-    # persisted layout wins over whatever the resuming caller passed.
-    # The two writes are independent — overlapped (§2.6). The seen-delta
-    # write runs the claim's invariant observation; check_claims fails the
-    # round before anything commits if a claimed url was already seen.
-    # The bloom write observes segment health, the max load factor across
-    # segments (>1.0 ⇒ FP rate past design point; exactness unaffected,
-    # resize advised), without a job of its own.
-    fill = Observation()
-    _par(
-        lambda: state.write("seen", round_no, with_part(
-            claimed.select("url"), store.partitions
-        ).withColumn("claim_round", F.lit(round_no)), ncoalesce=8),
-        lambda: state.write("bloom", round_no, store.segments.observe(
-            fill, F.max(F.col("n_items") / F.col("capacity")).alias("m")
-        ), ncoalesce=4),
-    )
-    store.check_claims()
-    store.load(state.read("bloom", round_no),
-               _effective_seen(state, round_no))
     _mark("t_claim", tick)
 
     # --- fetch + extract + flag + classify -----------------------------------
@@ -633,8 +629,9 @@ def run_round(
     else:
         prio = F.col("crawl_depth")
     candidates = candidates.withColumn("priority", prio).drop("_n_inlinks")
-    # candidates are unique by construction (groupBy url above) — skip the
-    # probe's defensive distinct shuffle
+    # the round's one segment pass: delete the retired urls, insert the
+    # claims, probe the candidates (unique by construction, groupBy url
+    # above — skip the probe's defensive distinct shuffle)
     fresh = candidates.join(
         store.filter_new(candidates, assume_unique=True).select("url"),
         "url", "left_semi",
@@ -670,14 +667,14 @@ def run_round(
                 **sched_n,  # n_frontier, n_scheduled, n_deferred, n_blocked
                 # every scheduled url is new: the claim invariant
                 "n_new": n_scheduled,
-                "n_dup": 0,
-                "n_results": n_scheduled,  # one result row per claimed url
                 "n_enqueued": n_enqueued,
                 **link_n,  # n_redirected, n_redirect_loops
                 "n_trap_dropped": n_trap_dropped,
                 "elapsed_sec": elapsed,
                 "urls_per_sec": 2 * n_scheduled / elapsed if elapsed > 0 else 0.0,
-                "seen_fill_ratio": float(fill.get["m"] or 0.0),
+                # max segment load factor (>1.0 ⇒ FP rate past design
+                # point; exactness unaffected, resize advised)
+                "seen_fill_ratio": store.fill_ratio,
                 # classes compiled since the round began (the commit
                 # writes below are not in it, as in elapsed_sec); about 0
                 # when this JVM has run the round's plans before
@@ -689,10 +686,18 @@ def run_round(
     )
 
     # --- commit ---------------------------------------------------------------
-    # the three commit tables are mutually independent (all inputs are
-    # checkpointed/derived above) — overlap their jobs (§2.6); the
-    # manifest commit still happens strictly after ALL of them land
-    _par(
+    # the commit tables are mutually independent (all inputs are
+    # checkpointed/derived above) — overlap their jobs (§2.6). The seen
+    # table is routed by store.partitions (manifest-adopted), not
+    # config.seen_partitions: the persisted layout wins. The seen-delta
+    # write runs the claim's invariant observation, and check_claims fails
+    # the round if a claimed url was already seen. The manifest commit
+    # still happens strictly after ALL of them land.
+    writes = [
+        lambda: state.write("seen", round_no, with_part(
+            claimed.select("url"), store.partitions
+        ).withColumn("claim_round", F.lit(round_no)), ncoalesce=8),
+        lambda: state.write("bloom", round_no, store.segments, ncoalesce=4),
         lambda: state.write("lineage", round_no, lineage,
                             ncoalesce=_nc(n_enqueued + n_scheduled)),
         lambda: state.write("metrics", round_no, totals, ncoalesce=1),
@@ -701,7 +706,12 @@ def run_round(
             sort_cols=["priority", "host", "crawl_depth"],
             ncoalesce=_nc(n_enqueued + n_deferred),
         ),
-    )
+    ]
+    if retired is not None:
+        writes.append(
+            lambda: state.write("retired", round_no, retired, ncoalesce=1))
+    _par(*writes)
+    store.check_claims()
     state.commit(round_no)
     return True
 
@@ -786,19 +796,19 @@ def run_crawl(
         # a static dim: collected once per crawl, not once per round
         config = replace(config, prompts=prompts_from_dim(tables["prompts"]))
     start = manifest["last_round"] + 1
-    store = _load_seen(spark, state, manifest["last_round"], config)
     # fail fast, not at round k: retire() requires the deletion-capable
     # backend, and the ADOPTED kind (manifest wins over config on resume)
     # is what will actually run
-    if config.recrawl_after_rounds is not None and store.filter_kind != "cuckoo":
+    kind = manifest.get("seen_filter_kind", config.seen_filter_kind)
+    if config.recrawl_after_rounds is not None and kind != "cuckoo":
         raise ValueError(
             "recrawl_after_rounds requires seen_filter_kind='cuckoo' "
-            f"(this state dir is pinned to '{store.filter_kind}'; Bloom "
+            f"(this state dir is pinned to '{kind}'; Bloom "
             "cannot delete — start a fresh crawl with the cuckoo backend)"
         )
     for r in range(start, max_rounds):
         if not state.exists("frontier", r):
             break
-        if not run_round(spark, state, r, config, tables, store):
+        if not run_round(spark, state, r, config, tables):
             break
     return state

@@ -7,26 +7,30 @@ computed natively in Spark (F.crc32) and identically in Python
 and no per-row Python is needed for routing. Segments are Bloom filters
 or, for TTL recrawl, deletion-capable cuckoo filters (frontier/cuckoo.py).
 
-Probe path (``filter_new``, link candidates):
-  candidates → part = crc32(url)%P, h1 = xxhash64(url) (both JVM columns —
-  the Arrow kernels never hash a url in Python) → cogroup with the
-  segments → filter-negatives are definitely new; filter-positives are
-  confirmed with an exact anti-join against the seen table (a false
-  positive never drops a url).
-Claim path (``probe_and_claim``, one round's scheduled + robots-blocked
-urls): insert-only. Every claimed url comes from the frontier, and every
-frontier url is unseen when its round starts: candidates were
+One segment pass per round. ``retire`` and ``probe_and_claim``/``add``
+only record their urls as op rows (part = crc32(url)%P, h1 =
+xxhash64(url), both JVM columns: the Arrow kernel never hashes a url in
+Python). ``filter_new`` then runs ONE cogroup of the segments with the
+op rows: per segment it deletes the retired urls, inserts the claims and
+probes the link candidates, in that order. Its output (segment rows and
+probe flags) is checkpointed once; the segments come from it, and the
+probe's positives are confirmed with an exact anti-join against the seen
+table, so a false positive never drops a url.
+
+Claims are insert-only. Every claimed url comes from the frontier, and
+every frontier url is unseen when its round starts: candidates were
 exact-filtered after the previous round's claims, deferred urls were
-never claimed, and TTL-refreshed urls were just retired. So the claim
-merges all urls into the segments (``add``: one cogroup, one task per
-segment) and appends them to the seen table without probing. Because
-every claim inserts, each cuckoo member owns its own fingerprint copy,
-which deletion relies on. The invariant is checked once per round: the
-claims are joined to the exact seen table under an observation on the
-seen-delta write, and ``check_claims`` raises ``SeenClaimError`` on a hit.
+never claimed, and TTL-refreshed urls were just retired. So a claim
+inserts without probing. Because every claim inserts, each cuckoo member
+owns its own fingerprint copy, which deletion relies on. The invariant
+is checked once per round: the claims are joined to the exact seen table
+under an observation on the seen-delta write, and ``check_claims`` raises
+``SeenClaimError`` on a hit.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -56,36 +60,37 @@ SEG_SCHEMA = StructType(
         StructField("bitmap", BinaryType()),
     ]
 )
+SEG_COLS = [f.name for f in SEG_SCHEMA.fields]
 
-PROBE_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("maybe_seen", BooleanType()),
-    ]
+# the pass's output: segment rows (url null) and probe rows (bitmap null)
+_PASS_SCHEMA = StructType(
+    SEG_SCHEMA.fields
+    + [StructField("url", StringType()), StructField("maybe_seen", BooleanType())]
 )
+_PASS_COLS = [f.name for f in _PASS_SCHEMA.fields]
+
+# op codes of the rows a pass applies, in the order it applies them
+_DELETE, _INSERT, _PROBE = 0, 1, 2
 
 
 class SeenClaimError(RuntimeError):
     """A round claimed a url that the exact seen table already held."""
 
 
-def with_part(df: DataFrame, partitions: int, url_col: str = "url") -> DataFrame:
+def with_part(df: DataFrame, partitions: int) -> DataFrame:
     return df.withColumn(
-        "part", F.pmod(F.crc32(F.col(url_col)), F.lit(partitions)).cast("int")
+        "part", F.pmod(F.crc32(F.col("url")), F.lit(partitions)).cast("int")
     )
 
 
-def with_part_hash(df: DataFrame, partitions: int,
-                   url_col: str = "url") -> DataFrame:
+def with_part_hash(df: DataFrame, partitions: int) -> DataFrame:
     """part for routing + h1 = xxhash64(url) for segment membership — both
     computed JVM-side so the Arrow kernels never hash a url in Python."""
-    return with_part(df, partitions, url_col).withColumn(
-        "h1", F.xxhash64(F.col(url_col))
-    )
+    return with_part(df, partitions).withColumn("h1", F.xxhash64(F.col("url")))
 
 
 class SeenStore:
-    """Bloom segments (small DF, one row per partition) + exact url table."""
+    """Filter segments (small DF, one row per partition) + exact url table."""
 
     def __init__(
         self,
@@ -103,87 +108,129 @@ class SeenStore:
         self.partitions = partitions
         self.capacity_per_part = capacity_per_part
         self.filter_kind = filter_kind
-        self._segments: DataFrame | None = None  # (part, capacity, n_hashes, bitmap)
+        self._segments: DataFrame | None = None  # SEG_SCHEMA rows
         self._seen: DataFrame | None = None  # (part, url)
+        self._ops: list[DataFrame] = []  # (part, url, h1, op), not yet applied
         self._claim_check: Observation | None = None
+        self.fill_ratio = 0.0  # max n_items/capacity after the last pass
 
     # -- state I/O ---------------------------------------------------------
     def load(self, segments: DataFrame | None, seen: DataFrame | None) -> None:
+        """Replace the segments and the exact table; recorded ops that
+        were not applied yet are dropped (``segments`` applies them)."""
         self._segments = segments
         self._seen = seen
+        self._ops = []
 
     @property
     def segments(self) -> DataFrame | None:
-        return self._segments
+        """The segments with every recorded delete and insert applied."""
+        if not self._ops:
+            return self._segments
+        return self._pass(self._ops).select(*SEG_COLS)
 
     @property
     def seen(self) -> DataFrame | None:
         return self._seen
 
+    def _record(self, urls: DataFrame, op: int) -> DataFrame:
+        rows = with_part_hash(urls.select("url").distinct(), self.partitions)
+        self._ops.append(rows.withColumn("op", F.lit(op)))
+        return rows
+
+    def _pass(self, ops: list[DataFrame]) -> DataFrame:
+        """ONE cogroup of the segments with the op rows: per segment,
+        delete, then insert, then probe. A full cogroup, so a segment with
+        no ops passes through unchanged; a part with no segment gets one
+        when something is inserted into it."""
+        cap, kind = self.capacity_per_part, self.filter_kind
+
+        def _apply(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            part = int((right if left.empty else left)["part"].iloc[0])
+            seg, n_items = None, 0
+            if not right.empty:
+                seg = segments_from_pdf(right)[part]
+                n_items = int(right["n_items"].iloc[0])
+            op = left["op"]
+            dels = series_u64(left.loc[op == _DELETE, "h1"])
+            if seg is not None and len(dels):
+                n_items = max(0, n_items - int(seg.delete_hashed(dels).sum()))
+            ins = series_u64(left.loc[op == _INSERT, "h1"])
+            if len(ins):
+                seg = seg if seg is not None else new_segment(kind, cap)
+                seg.add_hashed(ins)
+                # n_items tracks segment load: fill > capacity means the FP
+                # rate is degrading (correctness is unaffected — positives
+                # are always confirmed exactly — but re-sizing is due)
+                n_items += len(ins)
+            probe = left.loc[op == _PROBE]
+            out = [pd.DataFrame({
+                "part": part,
+                "url": probe["url"].values,
+                "maybe_seen": (seg.contains_hashed(series_u64(probe["h1"]))
+                               if seg is not None else False),
+            })] if len(probe) else []
+            if seg is not None:
+                out.append(pd.DataFrame({
+                    "part": [part], "capacity": [seg.capacity],
+                    "n_hashes": [seg.n_hashes], "n_items": [n_items],
+                    "bitmap": [seg.to_bytes()],
+                }))
+            # no rows when only deletes reach a part with no segment
+            return pd.concat(out or [pd.DataFrame()],
+                             ignore_index=True).reindex(columns=_PASS_COLS)
+
+        seg_df = self._segments
+        if seg_df is None:
+            seg_df = self.spark.createDataFrame([], SEG_SCHEMA)
+        return (
+            reduce(DataFrame.unionByName, ops).groupBy("part")
+            .cogroup(seg_df.groupBy("part"))
+            .applyInPandas(_apply, _PASS_SCHEMA)
+        )
+
     # -- probe -------------------------------------------------------------
-    def probe(self, urls: DataFrame, url_col: str = "url",
-              assume_unique: bool = False) -> DataFrame:
-        """→ (url, maybe_seen). Bloom-negative ⇒ definitely new.
+    def filter_new(self, urls: DataFrame, assume_unique: bool = False) -> DataFrame:
+        """Exact set of urls NOT in the seen store, after the recorded
+        retires and claims.
+
+        This is the store's one segment pass: it applies the recorded ops
+        and probes ``urls`` in one cogroup, checkpointed once. The
+        segments are read from that checkpoint (the pass's segment rows),
+        and so is ``fill_ratio``, by an observation on the checkpoint's
+        job. Filter-negatives are definitely new; filter-positives are
+        confirmed with an exact anti-join against the seen table.
 
         assume_unique=True skips the defensive distinct() — callers whose
-        input is unique by construction (frontier rows, groupBy-url
-        candidates) save a full shuffle of the probe set per call, which
-        at 10^10-url rounds is the single biggest avoidable exchange."""
-        sel = urls.select(F.col(url_col).alias("url"))
+        input is unique by construction (groupBy-url candidates) save a
+        full shuffle of the probe set per call."""
+        sel = urls.select("url")
         if not assume_unique:
             sel = sel.distinct()
-        cand = with_part_hash(sel, self.partitions)
-        if self._segments is None:
-            return cand.select("url").withColumn("maybe_seen", F.lit(False))
-
-        def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return pd.DataFrame(columns=["url", "maybe_seen"])
-            if right.empty:
-                return pd.DataFrame({"url": left["url"], "maybe_seen": False})
-            seg = segments_from_pdf(right)[int(right["part"].iloc[0])]
-            # h1 is the JVM xxhash64 column — membership is pure numpy
-            return pd.DataFrame(
-                {"url": left["url"],
-                 "maybe_seen": seg.contains_hashed(series_u64(left["h1"]))}
-            )
-
-        return (
-            cand.groupBy("part")
-            .cogroup(self._segments.groupBy("part"))
-            .applyInPandas(_probe, PROBE_SCHEMA)
-        )
-
-    def filter_new(self, urls: DataFrame, url_col: str = "url",
-                   assume_unique: bool = False) -> DataFrame:
-        """Exact set of urls NOT in the seen store (Bloom + confirm join).
-
-        The probe output feeds TWO consumers (Bloom-negatives passthrough
-        + positives' exact-confirm anti-join). Left as plain branches,
-        each consumer re-executes the whole probe subtree — the cogroup
-        Python pass AND everything upstream of it (in the round DAG
-        that's the link explode + canonicalize + groupBy) run twice. The
-        url-hash repartition below makes both branches read ONE reused
-        shuffle (Spark's exchange reuse), and its HashPartitioning(url)
-        already satisfies the anti-join's left-side distribution, so the
-        confirm join adds no exchange of its own."""
-        probed = self.probe(urls, url_col, assume_unique=assume_unique)
+        probe = with_part_hash(sel, self.partitions).withColumn("op", F.lit(_PROBE))
+        fill = Observation()
+        out = self._pass(self._ops + [probe]).observe(
+            fill, F.max(F.col("n_items") / F.col("capacity")).alias("m")
+        ).localCheckpoint()
+        self._segments = out.where(F.col("bitmap").isNotNull()).select(*SEG_COLS)
+        self._ops = []
+        self.fill_ratio = float(fill.get["m"] or 0.0)
+        probed = out.where(F.col("bitmap").isNull())
         if self._seen is None:
             return probed.select("url")
-        probed = probed.repartition(F.col("url"))
         negatives = probed.where(~F.col("maybe_seen")).select("url")
         positives = probed.where(F.col("maybe_seen")).select("url")
-        confirmed_new = positives.join(
-            self._seen.select("url"), "url", "left_anti"
+        return negatives.unionByName(
+            positives.join(self._seen.select("url"), "url", "left_anti")
         )
-        return negatives.unionByName(confirmed_new)
 
     # -- claim ---------------------------------------------------------------
-    def probe_and_claim(self, urls: DataFrame, url_col: str = "url") -> DataFrame:
-        """Claim ``urls``: insert every one into the segments and the seen
-        table (``add``). The claim does not probe, because of the claim
-        invariant: no url a round claims is in the exact seen table when
-        it is claimed (see the module docstring).
+    def probe_and_claim(self, urls: DataFrame) -> DataFrame:
+        """Claim ``urls``: record their insert into the segments (applied
+        by the next segment pass) and add them to the seen table. The
+        claim does not probe, because of the claim invariant: no url a
+        round claims is in the exact seen table when it is claimed (see
+        the module docstring).
 
         The invariant is checked, not assumed. The returned ``url`` rows
         (lazy) are joined to the exact seen table and observed: the action
@@ -191,10 +238,8 @@ class SeenStore:
         the table already holds, without a job of its own.
         ``check_claims`` then raises ``SeenClaimError`` if that count is
         not zero.
-
-        Updates ``self._segments`` and ``self._seen`` (caller persists).
         """
-        claims = urls.select(F.col(url_col).alias("url"))
+        claims = urls.select("url")
         checked, self._claim_check = claims, None
         if self._seen is not None:
             self._claim_check = Observation()
@@ -224,110 +269,40 @@ class SeenStore:
             )
 
     # -- retire (recrawl/TTL) ------------------------------------------------
-    def retire(self, urls: DataFrame, url_col: str = "url") -> None:
+    def retire(self, urls: DataFrame) -> None:
         """Remove urls from the seen store so they can be claimed (and
         fetched) again — the recrawl/TTL path. Requires the
         deletion-capable cuckoo backend: Bloom bits are shared between
         keys, so Bloom REFUSES (deleting would corrupt other members).
 
-        One cogroup pass deletes the fingerprints from the segments
-        (hashes computed JVM-side, numpy kernel); the exact seen table
-        drops the urls via anti-join. A retired url probes
-        filter-negative afterwards, so the next round claims and fetches
-        it fresh. Known bound: a retired url whose fingerprint collides
-        with another member in the same bucket pair (~2^-16 per
-        cohabitant) stays filter-positive and is re-confirmed against the
-        seen table — which is why the table must be pruned here too."""
+        Records the deletes for the next segment pass, which applies them
+        before any insert; recorded inserts are applied to the segments
+        first, so the ops keep their call order. The exact seen table
+        drops the urls via anti-join. A retired url probes filter-negative
+        afterwards, so the next round claims and fetches it fresh. Known
+        bound: a retired url whose fingerprint collides with another
+        member in the same bucket pair (~2^-16 per cohabitant) stays
+        filter-positive and is re-confirmed against the seen table — which
+        is why the table must be pruned here too."""
         if self.filter_kind != "cuckoo":
             raise ValueError(
                 "retire() requires the deletion-capable cuckoo backend "
                 "(SeenStore(filter_kind='cuckoo')); Bloom cannot delete"
             )
+        if self._ops:
+            self._segments, self._ops = self.segments, []
         if self._segments is None:
             return
-        ret = with_part_hash(
-            urls.select(F.col(url_col).alias("url")).distinct(), self.partitions
-        )
-
-        def _del(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if right.empty:
-                # urls routed to a partition with no segment: nothing to do
-                return pd.DataFrame(columns=[f.name for f in SEG_SCHEMA.fields])
-            part = int(right["part"].iloc[0])
-            seg = segments_from_pdf(right)[part]
-            n_items = int(right["n_items"].iloc[0]) if "n_items" in right else 0
-            if not left.empty:
-                deleted = seg.delete_hashed(series_u64(left["h1"]))
-                n_items = max(0, n_items - int(deleted.sum()))
-            return pd.DataFrame(
-                {
-                    "part": [part],
-                    "capacity": [seg.capacity],
-                    "n_hashes": [seg.n_hashes],
-                    "n_items": [n_items],
-                    "bitmap": [seg.to_bytes()],
-                }
-            )
-
-        self._segments = (
-            ret.groupBy("part")
-            .cogroup(self._segments.groupBy("part"))
-            .applyInPandas(_del, SEG_SCHEMA)
-        )
+        ret = self._record(urls, _DELETE)
         if self._seen is not None:
             self._seen = self._seen.join(ret.select("url"), "url", "left_anti")
 
     # -- update ------------------------------------------------------------
-    def add(self, new_urls: DataFrame, url_col: str = "url") -> None:
-        """Merge claimed urls into segments + seen table (in-memory DFs;
-        persistence is the checkpoint layer's job)."""
-        new = with_part_hash(
-            new_urls.select(F.col(url_col).alias("url")).distinct(),
-            self.partitions,
-        )
-        cap, kind = self.capacity_per_part, self.filter_kind
-
-        def _merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            part = int(left["part"].iloc[0]) if not left.empty else int(right["part"].iloc[0])
-            if right.empty:
-                seg = new_segment(kind, cap)
-                n_items = 0
-            else:
-                seg = segments_from_pdf(right)[part]
-                n_items = int(right["n_items"].iloc[0]) if "n_items" in right else 0
-            if not left.empty:
-                seg.add_hashed(series_u64(left["h1"]))
-                n_items += len(left)
-            # n_items tracks segment load: fill > capacity means the FP
-            # rate is degrading (correctness is unaffected — positives are
-            # always confirmed exactly — but re-sizing is due); surfaced
-            # via seen_fill_ratio in the round metrics
-            return pd.DataFrame(
-                {
-                    "part": [part],
-                    "capacity": [seg.capacity],
-                    "n_hashes": [seg.n_hashes],
-                    "n_items": [n_items],
-                    "bitmap": [seg.to_bytes()],
-                }
-            )
-
-        seg_df = self._segments
-        if seg_df is None:
-            seg_df = self.spark.createDataFrame([], SEG_SCHEMA)
-        # cogroup is a FULL cogroup: partitions with no new urls still
-        # appear (left empty, right = segment) and pass through unchanged,
-        # so no separate "untouched" pass is needed
-        self._segments = (
-            new.groupBy("part")
-            .cogroup(seg_df.groupBy("part"))
-            .applyInPandas(_merge, SEG_SCHEMA)
-        )
-
-        add_seen = new.select("part", "url")
+    def add(self, new_urls: DataFrame) -> None:
+        """Record claimed urls for the segments' next pass and add them to
+        the seen table (lazy DFs; persistence is the checkpoint layer's
+        job)."""
+        add_seen = self._record(new_urls, _INSERT).select("part", "url")
         self._seen = (
             add_seen if self._seen is None else self._seen.unionByName(add_seen)
         )
-        # NOTE: lazily defined — the crawl driver persists segments/seen to
-        # the round checkpoint and reloads (truncating lineage); standalone
-        # users can call .localCheckpoint() on .segments/.seen if iterating.

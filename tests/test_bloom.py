@@ -1,6 +1,9 @@
 """Unit + property tests for the Bloom segment store."""
 
+import random
+
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -68,3 +71,53 @@ def test_seen_store_incremental(spark):
     )
     got = {r[0] for r in store.filter_new(probe).collect()}
     assert got == {"c1", "c2"}
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_seen_store_ops_match_set_model(spark, kind):
+    """Random batches of claims, retires (cuckoo only) and probes through
+    the store agree with a plain set: ``filter_new`` is exact, the
+    segments' summed ``n_items`` is the set's size, and ``fill_ratio`` is
+    the max load of the segments the pass left. One batch reads the
+    segments and reloads them between its retire and its claim, as the
+    traced benchmark run does; each delete must still apply once. Another
+    retires urls it claimed before any pass ran."""
+    rng = random.Random(11)
+    universe = [f"https://h{i % 7}.ch/p{i:04d}" for i in range(300)]
+    store = SeenStore(spark, partitions=4, capacity_per_part=32,
+                      filter_kind=kind)
+    model: set[str] = set()
+
+    def df(urls):
+        return spark.createDataFrame([(u,) for u in sorted(urls)], "url string")
+
+    def claim():
+        claims = set(rng.sample(sorted(set(universe) - model), 40))
+        store.probe_and_claim(df(claims))
+        model.update(claims)
+
+    def retire(reload: bool):
+        ret = set(rng.sample(sorted(model), len(model) // 3))
+        store.retire(df(ret))
+        model.difference_update(ret)
+        if reload:
+            store.load(store.segments.localCheckpoint(), store.seen)
+
+    for batch in range(4):
+        if kind == "bloom":
+            claim()
+        elif batch == 3:  # a claim recorded before a retire in one pass
+            claim()
+            retire(reload=False)
+        else:
+            if model:
+                retire(reload=batch == 2)
+            claim()
+        probe = set(rng.sample(universe, 120))
+        got = {r[0] for r in store.filter_new(df(probe)).collect()}
+        assert got == probe - model, batch
+        seg = store.segments.select(
+            F.sum("n_items"), F.max(F.col("n_items") / F.col("capacity"))
+        ).first()
+        assert seg[0] == len(model), batch
+        assert store.fill_ratio == seg[1], batch

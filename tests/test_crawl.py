@@ -320,6 +320,38 @@ def test_ttl_crash_at_state_write_resumes_exactly(
     assert seen == ttl_golden["seen_set"]
 
 
+@pytest.mark.parametrize("cfg", [CFG, TTL_CFG], ids=["bloom", "cuckoo_ttl"])
+def test_one_segment_pass_per_round(spark, corpus_dir, tmp_path_factory,
+                                    monkeypatch, cfg):
+    """A round applies its retires, claims and candidate probes to the
+    seen segments in ONE Python cogroup, Bloom and cuckoo+TTL alike."""
+    from pyspark.sql.group import GroupedData
+
+    from fraudcrawler_spark.frontier import crawl
+
+    calls, per_round = [0], {}
+    cogroup, run_round = GroupedData.cogroup, crawl.run_round
+
+    def counting_cogroup(self, other):
+        calls[0] += 1
+        return cogroup(self, other)
+
+    def counted_round(spark_, state, round_no, *args, **kwargs):
+        calls[0] = 0
+        out = run_round(spark_, state, round_no, *args, **kwargs)
+        per_round[round_no] = calls[0]
+        return out
+
+    monkeypatch.setattr(GroupedData, "cogroup", counting_cogroup)
+    monkeypatch.setattr(crawl, "run_round", counted_round)
+    root = str(tmp_path_factory.mktemp("one_pass"))
+    state = run_crawl(spark, corpus_dir, root, cfg, max_rounds=2)
+    assert state.read_manifest()["last_round"] == 1
+    if cfg.recrawl_after_rounds is not None:
+        assert state.exists("retired", 1)  # round 1 retires round 0's claims
+    assert per_round == {0: 1, 1: 1}
+
+
 def test_salting_bounds_skew(spark, corpus_dir):
     """Zipf-head hosts split across salt cells: the widest (host, salt)
     cell is ~1/s of the widest host (the straggler-killer property)."""
