@@ -14,7 +14,8 @@ parquet + an atomic JSON manifest: every completed round commits
     frontier/round=K+1/    the next round's frontier
     lineage/round=K/       per-url provenance (url, stage, src) for round K
     metrics/round=K/       one row of round counters and phase times
-                           (n_codegen_compiles: classes the round compiled)
+                           (n_codegen_compiles: classes the round compiled,
+                           jit_compile_s: JIT compile seconds in the round)
     -- then:
     manifest.json          {"last_round": K, ...}   ← the commit point
 

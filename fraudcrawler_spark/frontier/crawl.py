@@ -59,7 +59,7 @@ from fraudcrawler_spark.operators.classify_stage import classify_stage
 from fraudcrawler_spark.operators.discover import discover
 from fraudcrawler_spark.operators.fetch import fetch_extract
 from fraudcrawler_spark.pipeline import prompts_from_dim, read_corpus
-from fraudcrawler_spark.session import codegen_compiles, local_df
+from fraudcrawler_spark.session import codegen_compiles, jit_compile_s, local_df
 
 STAGE_EXCLUDED = "excluded domain (hard drop)"
 
@@ -386,7 +386,7 @@ def run_round(
     ``config.prompts``, into which ``run_crawl`` resolves the corpus prompt
     dim once per crawl."""
     t0 = time.time()
-    compiles0 = codegen_compiles(spark)
+    compiles0, jit0 = codegen_compiles(spark), jit_compile_s(spark)
     phase: dict[str, float] = {}
 
     def _mark(name: str, since: list[float]) -> None:
@@ -671,7 +671,7 @@ def run_round(
                 **link_n,  # n_redirected, n_redirect_loops
                 "n_trap_dropped": n_trap_dropped,
                 "elapsed_sec": elapsed,
-                "urls_per_sec": 2 * n_scheduled / elapsed if elapsed > 0 else 0.0,
+                "urls_per_sec": n_scheduled / elapsed if elapsed > 0 else 0.0,
                 # max segment load factor (>1.0 ⇒ FP rate past design
                 # point; exactness unaffected, resize advised)
                 "seen_fill_ratio": store.fill_ratio,
@@ -680,6 +680,10 @@ def run_round(
                 # when this JVM has run the round's plans before
                 # (session.get_spark sizes the codegen cache)
                 "n_codegen_compiles": codegen_compiles(spark) - compiles0,
+                # seconds the JVM's JIT compiled in the same span; under
+                # C1 (session.get_spark) about 1 s in a first round, less
+                # once the JVM is warm
+                "jit_compile_s": round(jit_compile_s(spark) - jit0, 3),
                 **phase,
             }
         ]

@@ -14,6 +14,11 @@ log = logging.getLogger(__name__)
 # default is 100). See get_spark.
 CODEGEN_CACHE_ENTRIES = 2000
 
+# JIT options of the local driver JVM (spark.driver.defaultJavaOptions):
+# C1 only, with the code cache tiered compilation would reserve. See
+# get_spark.
+DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
+
 
 def _default_driver_mem() -> str:
     """Half of the machine's physical memory, in whole gigabytes (>= 1g)."""
@@ -50,6 +55,32 @@ def get_spark(
     overrides it like any other conf. ``codegen_compiles`` reads how
     many classes the JVM has compiled; ``run_round`` records each
     round's count as ``n_codegen_compiles``.
+
+    The driver JVM runs with ``DRIVER_JAVA_OPTIONS``: HotSpot's C1
+    compiler only (``-XX:TieredStopAtLevel=1``: no profiled tier-3 code,
+    no C2) and a 240 MB code cache. A crawl round is 30-40 short Spark
+    jobs over a few hundred urls; the C2 threads' optimised code does
+    not pay back its compile time within such rounds. Measured on
+    crawlbench (4 cores): in the first timed ``recrawl_resume``
+    operation (seed 41) tiered JIT compiled for 6.0 s of the
+    operation's 14.1 CPU seconds, and for 1.7-3.8 s in each of the next
+    nine; C1 alone compiled for 0.8 s, then 0.2-0.6 s. Over ten seeds
+    C1 cut the median round CPU from 8.24 to 5.54 s (``bfs_rounds``)
+    and from 11.63 to 7.36 s (``recrawl_resume``). The cache size is
+    needed too: with C1 alone HotSpot reserves 48 MB. Two
+    ``recrawl_resume`` operations filled 44.7 MB of it, the JIT flushed
+    code, and the third operation cost 15.1 CPU seconds instead of
+    about 9. The whole test suite peaks at 91 MB of the 240. The
+    options go through ``spark.driver.defaultJavaOptions``, which Spark
+    puts on the java command line before
+    ``spark.driver.extraJavaOptions``, so a caller's
+    ``extraJavaOptions`` adds to them (a later flag wins) and does not
+    replace them. They apply only when this call launches the JVM, and
+    they reach the executors only because local mode runs them in the
+    driver's JVM; on a cluster the executors keep their own JIT.
+    ``extra_conf`` overrides them like any other conf.
+    ``jit_compile_s`` reads the JIT's compile time; ``run_round``
+    records each round's share as ``jit_compile_s``.
     """
     cores = cores or int(
         os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
@@ -70,6 +101,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
@@ -87,6 +119,15 @@ def codegen_compiles(spark: SparkSession) -> int:
     in between, on any thread."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def jit_compile_s(spark: SparkSession) -> float:
+    """Seconds this JVM's JIT compiler threads have spent compiling so
+    far (``CompilationMXBean.getTotalCompilationTime``, summed over the
+    threads). Read through py4j, so it runs no Spark job; JVM-wide, like
+    ``codegen_compiles``."""
+    mx = spark._jvm.java.lang.management.ManagementFactory
+    return mx.getCompilationMXBean().getTotalCompilationTime() / 1000.0
 
 
 def local_df(spark: SparkSession, data, schema: str | None = None):

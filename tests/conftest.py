@@ -6,6 +6,16 @@ from fraudcrawler_spark.datagen import write_corpus
 from fraudcrawler_spark.session import get_spark
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "session_end: run after every other test (reads JVM-wide "
+        "peaks of the shared session)")
+
+
+def pytest_collection_modifyitems(items):
+    items.sort(key=lambda item: item.get_closest_marker("session_end") is not None)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="fc_tests", cores=4, shuffle_partitions=8)

@@ -104,6 +104,9 @@ def test_round_counters_match_tables_and_golden(crawl_state, golden):
         assert m["n_blocked"] == len(g["blocked"]), rnd
         assert m["n_deferred"] == g["n_deferred"], rnd
         assert m["n_enqueued"] == stages.get("enqueued", 0), rnd
+        # each fetched url counted once
+        assert m["urls_per_sec"] == pytest.approx(
+            m["n_scheduled"] / m["elapsed_sec"]), rnd
 
 
 def test_robots_respected(crawl_state, spark, corpus_dir):
@@ -208,6 +211,16 @@ def test_warm_crawl_compiles_nothing(spark, corpus_dir, tmp_path_factory):
         assert m["n_codegen_compiles"].notna().all()
         counts.append(int(m["n_codegen_compiles"].sum()))
     assert counts[1] < counts[0] / 10, counts
+
+
+def test_round_records_jit_compile_time(crawl_state):
+    """Every round's metrics row records the seconds the JVM's JIT spent
+    compiling during the round (session.jit_compile_s), beside
+    n_codegen_compiles."""
+    last = crawl_state.read_manifest()["last_round"]
+    m = crawl_state.read_all("metrics", last).toPandas()
+    assert len(m) == last + 1
+    assert (m["jit_compile_s"] >= 0).all(), m["jit_compile_s"].tolist()
 
 
 @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
