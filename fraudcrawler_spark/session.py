@@ -19,6 +19,10 @@ CODEGEN_CACHE_ENTRIES = 2000
 # get_spark.
 DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 
+# Python worker daemon (spark.python.daemon.module): the stock daemon,
+# minus a zip re-read per task on CPython < 3.12. See get_spark.
+PYTHON_DAEMON_MODULE = "fraudcrawler_spark.pydaemon"
+
 
 def _default_driver_mem() -> str:
     """Half of the machine's physical memory, in whole gigabytes (>= 1g)."""
@@ -81,6 +85,27 @@ def get_spark(
     ``extra_conf`` overrides them like any other conf.
     ``jit_compile_s`` reads the JIT's compile time; ``run_round``
     records each round's share as ``jit_compile_s``.
+
+    Python workers fork from ``PYTHON_DAEMON_MODULE``
+    (``spark.python.daemon.module``), PySpark's own daemon with one
+    change on CPython < 3.12. PySpark's worker calls
+    ``importlib.invalidate_caches()`` at the start of every task, and
+    before CPython 3.12 (gh-103200) that makes every ``zipimporter``
+    re-read its archive's whole directory. Spark puts
+    ``pyspark.zip`` (1,328 entries) first on the workers' path, and
+    about 16 importers point into it, so each task re-read 16
+    directories: a one-row pandas UDF task cost about 100 ms of worker
+    CPU. The daemon re-reads an archive only when its mtime or size has
+    changed (see ``pydaemon``), and the same task costs about 10 ms.
+    Measured on crawlbench (4 cores, seed 41), worker CPU per operation:
+    ``bfs_rounds`` 1.41-1.49 s → 0.39-0.42 s, ``recrawl_resume``
+    0.50-0.52 s → 0.20-0.23 s. A warm task now costs 1-10 ms, except the
+    seen-segment cogroup's (about 0.13 s, its own pandas work). On
+    CPython 3.12+ the daemon runs the stock one unchanged. Spark starts it with ``python -m``, so the package
+    must import from the driver's working directory or ``PYTHONPATH``;
+    workers need that anyway, to unpickle this package's UDFs.
+    ``extra_conf`` overrides it like any other conf
+    (``"pyspark.daemon"`` is the stock daemon).
     """
     cores = cores or int(
         os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
@@ -102,6 +127,7 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
@@ -117,7 +143,8 @@ def codegen_compiles(spark: SparkSession) -> int:
     counter through py4j, so it runs no Spark job. The counter is
     JVM-wide: the difference of two reads counts every query that ran
     in between, on any thread."""
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    metrics = getattr(spark._jvm,
+                      "org.apache.spark.metrics.source.CodegenMetrics")
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
@@ -126,7 +153,7 @@ def jit_compile_s(spark: SparkSession) -> float:
     far (``CompilationMXBean.getTotalCompilationTime``, summed over the
     threads). Read through py4j, so it runs no Spark job; JVM-wide, like
     ``codegen_compiles``."""
-    mx = spark._jvm.java.lang.management.ManagementFactory
+    mx = getattr(spark._jvm, "java.lang.management.ManagementFactory")
     return mx.getCompilationMXBean().getTotalCompilationTime() / 1000.0
 
 
@@ -161,8 +188,9 @@ def _prime(spark: SparkSession) -> None:
 
     A fresh local JVM pays several seconds of one-time cost on its first
     real query — whole-stage-codegen/Janino compilation, the noop sink's
-    provider lookup, shuffle/broadcast netty setup, and the pyspark
-    daemon spawn for the first Arrow/pandas stage. In the bench those
+    provider lookup, shuffle/broadcast netty setup, and the spawn of the
+    Python worker daemon (``PYTHON_DAEMON_MODULE``) for the first
+    Arrow/pandas stage. In the bench those
     costs land on whichever OPERATOR happens to run first (r5: 85% of
     pricing_summary's headline seconds were this bootstrap — 8.4 s cold
     vs 1.2 s warm, measured), so per-query timings conflate engine
@@ -206,8 +234,9 @@ def _prime(spark: SparkSession) -> None:
             .write.mode("overwrite").format("noop").save()
         )
 
-        # first Arrow/pandas stage: starts the pyspark daemon (worker
-        # forks afterwards are cheap) + loads the ArrowPythonRunner path
+        # first Arrow/pandas stage: starts the worker daemon
+        # (PYTHON_DAEMON_MODULE; worker forks afterwards are cheap) +
+        # loads the ArrowPythonRunner path
         @F.pandas_udf("long")
         def _echo(x: pd.Series) -> pd.Series:
             return x

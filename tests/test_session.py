@@ -1,15 +1,22 @@
 """Session factory: machine-fitted defaults, the driver JVM's JIT options,
-and a warm-up that reports its failures instead of swallowing them."""
+the Python worker daemon, and a warm-up that reports its failures instead
+of swallowing them."""
 
+import importlib.util
 import logging
 import os
 import re
 import subprocess
+import sys
+import zipfile
+import zipimport
 
+import pandas as pd
 import pytest
 from pyspark.find_spark_home import _find_spark_home
+from pyspark.sql import functions as F
 
-from fraudcrawler_spark import session
+from fraudcrawler_spark import pydaemon, session
 
 
 class _Conf:
@@ -65,7 +72,7 @@ def test_prime_runs_without_warning(spark, monkeypatch, caplog):
 
 
 def _jmx(spark):
-    return spark._jvm.java.lang.management.ManagementFactory
+    return getattr(spark._jvm, "java.lang.management.ManagementFactory")
 
 
 def test_driver_jvm_runs_c1_with_full_code_cache(spark):
@@ -104,6 +111,69 @@ def test_extra_java_options_do_not_drop_driver_options(spark):
     tmpdir = out.index("-Djava.io.tmpdir=/fc_tmp")
     for flag in session.DRIVER_JAVA_OPTIONS.split():
         assert out.index(flag) < tmpdir, out
+
+
+def test_python_workers_start_from_package_daemon(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == (
+        session.PYTHON_DAEMON_MODULE)
+
+
+def test_worker_task_rereads_no_unchanged_zip(spark):
+    """Inside a worker, the per-task importlib.invalidate_caches() reads
+    no zip directory: the archives on the workers' path (pyspark.zip
+    first) have not changed. The stock daemon re-reads about 16 on
+    CPython 3.11."""
+
+    @F.pandas_udf("long")
+    def zip_reads(x: pd.Series) -> pd.Series:
+        import importlib
+        import zipimport as zi
+
+        n = 0
+        read = zi._read_directory
+
+        def counted(archive):
+            nonlocal n
+            n += 1
+            return read(archive)
+
+        zi._read_directory = counted
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zi._read_directory = read
+        return pd.Series([n] * len(x))
+
+    rows = spark.range(0, 8, 1, 4).select(zip_reads("id").alias("n")).collect()
+    assert {r.n for r in rows} == {0}
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12),
+                    reason="zipimporter no longer re-reads on invalidate")
+def test_zip_reread_only_when_archive_changes(tmp_path):
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"fc_old": "X = 1\n"})
+    importer = zipimport.zipimporter(archive)
+    pydaemon.invalidate_caches_if_changed(importer)
+    files = importer._files
+    pydaemon.invalidate_caches_if_changed(importer)
+    assert importer._files is files  # unchanged archive: not re-read
+    assert importer.find_spec("fc_new") is None
+
+    _write_zip(archive, {"fc_old": "X = 1\n", "fc_new": "Y = 2\n"})
+    pydaemon.invalidate_caches_if_changed(importer)
+    assert importer._files is not files
+    spec = importer.find_spec("fc_new")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod.Y == 2
 
 
 @pytest.mark.session_end
