@@ -64,14 +64,6 @@ class Enrichment:
 
 
 @dataclass(frozen=True)
-class Deepness:
-    """Reference base/base.py:100-104."""
-
-    num_results: int
-    enrichment: Enrichment | None = None
-
-
-@dataclass(frozen=True)
 class CrawlConfig:
     """Frontier-engine job config (target-side)."""
 

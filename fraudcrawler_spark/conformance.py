@@ -34,6 +34,7 @@ from fraudcrawler_spark.config import (
 )
 from fraudcrawler_spark.functions.classify import classify_expr
 from fraudcrawler_spark.functions.urls import canonical_host_expr
+from fraudcrawler_spark.operators.discover import country_keep
 from fraudcrawler_spark.session import local_df
 
 
@@ -123,7 +124,7 @@ SQL_PRICING = """
 def q_country_flag(spark, sf_dir):
     """F1 — substring country filter, flag-not-drop (serp.py:150-158)."""
     urls = _customer_urls(spark, sf_dir)
-    keep = F.lower(F.col("url")).contains(".ch") | F.lower(F.col("url")).contains(".com")
+    keep = country_keep(F.col("url"), "ch")
     return urls.select(
         "c_custkey",
         "url",
@@ -599,7 +600,7 @@ def q_pipeline_composite(spark, sf_dir):
         F.concat(F.lit("doc "), F.col("doc_id").cast("string")).alias("name"),
         F.substring("text", 1, 40).alias("descr"),
     )
-    keep = F.lower(F.col("url")).contains(".ch") | F.lower(F.col("url")).contains(".com")
+    keep = country_keep(F.col("url"), "ch")
     flagged = base.withColumn("filtered", ~keep).withColumn(
         "filtered_at_stage",
         F.when(~keep, F.lit(STAGE_COUNTRY)).otherwise(F.lit(None).cast("string")),

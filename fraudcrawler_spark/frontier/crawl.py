@@ -17,9 +17,11 @@ Round K dataflow (all DataFrame ops; barriers land on shuffles):
   scheduled ∪ blocked ──SeenStore claim (insert-only, recorded; no url is
       already seen, checked against the exact table)──► seen_K delta
   scheduled ──fetch join on pages ──extract kernel──► results_K (+ prob flag + classify)
-  results_K(unflagged) ──explode links──canonicalize──country/excluded──►
-      candidates ──ONE segment pass (delete retired, insert claims, probe
-      candidates)──minus seen──dedup──► frontier_{K+1} = deferred ∪ candidates
+  results_K(unflagged) ──explode links──canonicalize──► links, each with
+      its lineage stage (redirect_loop/country/excluded/trap, null = a
+      candidate), checkpointed once ──null stage──dedup──► candidates
+      ──ONE segment pass (delete retired, insert claims, probe
+      candidates)──minus seen──► frontier_{K+1} = deferred ∪ candidates
   commit: seen_K, retired_K, bloom_K, lineage_K, metrics_K, frontier_{K+1},
       then the manifest
 
@@ -56,7 +58,11 @@ from fraudcrawler_spark.functions.urls import (
     url_template_expr,
 )
 from fraudcrawler_spark.operators.classify_stage import classify_stage
-from fraudcrawler_spark.operators.discover import discover
+from fraudcrawler_spark.operators.discover import (
+    country_keep,
+    discover,
+    excluded_domains,
+)
 from fraudcrawler_spark.operators.fetch import fetch_extract
 from fraudcrawler_spark.pipeline import prompts_from_dim, read_corpus
 from fraudcrawler_spark.session import codegen_compiles, jit_compile_s, local_df
@@ -107,6 +113,17 @@ def _checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     return df, {n: got[n] for n in aggs}
 
 
+def _seed_rows(urls: DataFrame) -> DataFrame:
+    """Frontier rows at seed priority and depth for ``urls``: discovery
+    seeds, sitemap entries and TTL refreshes."""
+    return urls.select(
+        "url",
+        canonical_host_expr(F.col("url")).alias("host"),
+        F.lit(0).alias("priority"),
+        F.lit(0).alias("crawl_depth"),
+    )
+
+
 def _lineage(df: DataFrame, stage: str, src_col: str | None = None) -> DataFrame:
     src = F.col(src_col) if src_col else F.lit(None).cast("string")
     return df.select(
@@ -137,12 +154,7 @@ def init_crawl(
     # lineage writes (overlapped below) — materialize once instead of
     # running the whole pages⨝seeds discovery twice
     flagged = items.where(F.col("filtered"))
-    seed_cand = items.where(~F.col("filtered")).select(
-        "url",
-        canonical_host_expr(F.col("url")).alias("host"),
-        F.lit(0).alias("priority"),
-        F.lit(0).alias("crawl_depth"),
-    )
+    seed_cand = _seed_rows(items.where(~F.col("filtered")))
     # --- opt-in sitemap seeding (config.use_sitemaps): the discovery
     # surface every real crawler consumes next to robots.txt — sitemap-
     # listed urls enter frontier_0 at seed priority, through the SAME
@@ -156,21 +168,12 @@ def init_crawl(
             )
         from fraudcrawler_spark.sources.sitemap import parse_sitemaps
 
-        cc = config.country_code.lower()
-        ents = parse_sitemaps(t["sitemaps"]).select(
-            F.col("loc").alias("url"),
-            canonical_host_expr(F.col("loc")).alias("host"),
-            F.lit(0).alias("priority"),
-            F.lit(0).alias("crawl_depth"),
-        )
-        ents = ents.where(
-            F.lower(F.col("url")).contains(f".{cc}")
-            | F.lower(F.col("url")).contains(".com")
-        )
-        excl = t.get("excluded_hosts")
+        ents = _seed_rows(
+            parse_sitemaps(t["sitemaps"]).select(F.col("loc").alias("url"))
+        ).where(country_keep(F.col("url"), config.country_code))
+        excl = excluded_domains(t.get("excluded_hosts"), "host")
         if excl is not None:
-            excl_dom = excl.select(F.explode("domains").alias("host")).distinct()
-            ents = ents.join(F.broadcast(excl_dom), "host", "left_anti")
+            ents = ents.join(F.broadcast(excl), "host", "left_anti")
         sitemap_cand = ents.select(*FRONTIER_COLS)
         seed_cand = seed_cand.unionByName(sitemap_cand)
     frontier0 = (
@@ -416,15 +419,8 @@ def run_round(
         expired = st.where(F.col("due")).select("url")
         store.retire(expired)
         retired = expired.withColumn("retire_round", F.lit(round_no))
-        refresh = expired.join(
-            frontier.select("url"), "url", "left_anti"
-        ).select(
-            "url",
-            canonical_host_expr(F.col("url")).alias("host"),
-            F.lit(0).alias("priority"),
-            F.lit(0).alias("crawl_depth"),
-        )
-        frontier = frontier.unionByName(refresh.select(*FRONTIER_COLS))
+        frontier = frontier.unionByName(_seed_rows(
+            expired.join(frontier.select("url"), "url", "left_anti")))
     _mark("t_read", tick)
 
     # --- politeness + robots ------------------------------------------------
@@ -495,10 +491,10 @@ def run_round(
     _mark("t_fetch", tick)
 
     # --- link expansion → next frontier candidates ----------------------------
-    # single pass: explode + canonicalize + status-tag (country/excluded/ok),
-    # materialized once, then sliced for candidates vs lineage
-    cc = config.country_code.lower()
-    raw_expanded = (
+    # ONE plan, checkpointed once: explode + canonicalize, then tag each
+    # link with its lineage stage. A null stage is a candidate; the other
+    # links are the round's gate lineage.
+    links = (
         results.where(~F.col("filtered"))
         .select(
             F.col("url").alias("src_url"),
@@ -517,101 +513,78 @@ def run_round(
     # that are redirect sources are rewritten to their final landing url
     # BEFORE host derivation / gating / dedup (a crawler that enqueues the
     # 301 source re-discovers the same content under two names); loops /
-    # over-long chains are dead urls — dropped with lineage 'redirect_loop'.
-    # The pointer-doubled map is built once per crawl (run_crawl) and is
-    # url-keyed, so this is one hash join per round.
+    # over-long chains are dead urls, staged 'redirect_loop'. The
+    # pointer-doubled map is built once per crawl (run_crawl) and is
+    # url-keyed, so this is one hash join per round. Off, the status is a
+    # null constant and both redirect counters read 0.
     redirect_map = tables.get("_redirect_map")
-    if redirect_map is not None:
-        rm = redirect_map.select(
-            F.col("src_url").alias("_r_src"),
-            F.col("final_url").alias("_r_final"),
-            F.col("status").alias("_r_status"),
-        )
-        raw_expanded = (
-            raw_expanded.join(rm, raw_expanded["url"] == rm["_r_src"], "left")
-            .withColumn(
-                "url",
-                F.when(F.col("_r_status") == "ok", F.col("_r_final")).otherwise(
-                    F.col("url")
-                ),
-            )
-            .withColumn("_redir_loop",
-                        F.col("_r_status") == "too_many_redirects")
-            .withColumn("_redirected", F.col("_r_status") == "ok")
-            .drop("_r_src", "_r_final", "_r_status")
-        )
+    if redirect_map is None:
+        links = links.withColumn("_r_status", F.lit(None).cast("string"))
     else:
-        raw_expanded = raw_expanded.withColumn(
-            "_redir_loop", F.lit(False)
-        ).withColumn("_redirected", F.lit(False))
-    raw_expanded = raw_expanded.withColumn(
-        "host", canonical_host_expr(F.col("url"))
-    )
-    keep = F.lower(F.col("url")).contains(f".{cc}") | F.lower(F.col("url")).contains(".com")
-    excl = tables.get("excluded_hosts")
-    if excl is not None:
-        excl_dom = excl.select(F.explode("domains").alias("host")).distinct()
-        raw_expanded = raw_expanded.join(
-            F.broadcast(excl_dom.withColumn("_excl", F.lit(True))), "host", "left"
-        )
+        links = links.join(
+            redirect_map.select(
+                F.col("src_url").alias("url"),
+                F.col("final_url").alias("_r_final"),
+                F.col("status").alias("_r_status"),
+            ),
+            "url", "left",
+        ).withColumn(
+            "url",
+            F.when(F.col("_r_status") == "ok", F.col("_r_final"))
+            .otherwise(F.col("url")),
+        ).drop("_r_final")
+    links = links.withColumn("host", canonical_host_expr(F.col("url")))
+    excl = excluded_domains(tables.get("excluded_hosts"), "host")
+    if excl is None:
+        links = links.withColumn("_excl", F.lit(None).cast("boolean"))
     else:
-        raw_expanded = raw_expanded.withColumn("_excl", F.lit(None).cast("boolean"))
+        links = links.join(
+            F.broadcast(excl.withColumn("_excl", F.lit(True))), "host", "left"
+        )
     # country flag at enqueue (reference F1, serp.py:150-158); excluded
     # domains hard-drop (reference J2, serp.py:244-246)
-    raw_expanded = raw_expanded.withColumn(
-        "link_status",
-        F.when(F.col("_redir_loop"), F.lit("redirect_loop"))
-        .when(~keep, F.lit("country"))
-        .when(F.col("_excl"), F.lit("excluded"))
-        .otherwise(F.lit("ok")),
-    ).drop("_excl", "_redir_loop")
-    # both counts read 0 when resolve_redirects is off (constant false)
-    raw_expanded, link_n = _checkpoint(
-        raw_expanded,
-        n_redirected=F.count_if(F.col("_redirected")),
-        n_redirect_loops=F.count_if(F.col("link_status") == "redirect_loop"),
-    )
-    country_flagged = raw_expanded.where(F.col("link_status") == "country")
-    dropped = raw_expanded.where(F.col("link_status") == "excluded")
-    loop_dropped = raw_expanded.where(F.col("link_status") == "redirect_loop")
-    expanded = raw_expanded.where(F.col("link_status") == "ok")
-
-    # --- opt-in adaptive trap suppression (config.trap_gate): mine this
-    # round's candidate stream for exploding (host, template) cells and
-    # drop their members before dedup/enqueue. One extra aggregation over
-    # data already checkpointed; the trap dim joins back on the same
-    # (host, template) key. Single-variable templates are exempt, so a
-    # host's real article space never trips it (url_template_expr, shared
-    # with the oracled trap_detect entry).
-    n_trap_dropped = 0
-    trap_dropped = None
+    links = links.withColumn(
+        "stage",
+        F.when(F.col("_r_status") == "too_many_redirects",
+               F.lit("redirect_loop"))
+        .when(~country_keep(F.col("url"), config.country_code),
+              F.lit(STAGE_COUNTRY))
+        .when(F.col("_excl"), F.lit(STAGE_EXCLUDED)),
+    ).drop("_excl")
+    # --- opt-in adaptive trap suppression (config.trap_gate): a (host,
+    # template) cell of null-stage links holding at least TRAP_MIN_URLS
+    # distinct urls across TRAP_MIN_VAR variable segments is a trap, and
+    # its links are staged 'trap'. Counted by a window inside the same
+    # checkpoint (distinct urls = max dense_rank over url; collect_set
+    # would hold a whole cell), so the explode/canonicalize plan runs
+    # once. Single-variable templates are exempt, so a host's real
+    # article space never trips it (url_template_expr, shared with the
+    # oracled trap_detect entry).
     if config.trap_gate:
-        expanded = expanded.withColumn(
-            "_template", url_template_expr(F.col("url"))
-        )
+        links = links.withColumn("_template", url_template_expr(F.col("url")))
+        cell = Window.partitionBy(
+            "host", "_template", F.col("stage").isNull())
         n_var = F.length("_template") - F.length(
             F.regexp_replace("_template", r"[NV]", "")
         )
-        traps = (
-            expanded.groupBy("host", "_template")
-            .agg(F.countDistinct("url").alias("_n_urls"))
-            .where(
-                (F.col("_n_urls") >= TRAP_MIN_URLS)
-                & (n_var >= TRAP_MIN_VAR)
-            )
-            .select("host", "_template", F.lit(True).alias("_trap"))
-        )
-        expanded, trap_n = _checkpoint(
-            expanded.join(traps, ["host", "_template"], "left"),
-            n=F.count_if(F.col("_trap")),
-        )
-        n_trap_dropped = trap_n["n"]
-        trap_dropped = expanded.where(F.col("_trap")).drop("_template", "_trap")
-        expanded = expanded.where(F.col("_trap").isNull()).drop(
-            "_template", "_trap"
-        )
-
-    candidates = expanded.groupBy("url").agg(
+        links = links.withColumn(
+            "_rank", F.dense_rank().over(cell.orderBy("url"))
+        ).withColumn(
+            "stage",
+            F.when(
+                F.col("stage").isNull()
+                & (F.max("_rank").over(cell) >= TRAP_MIN_URLS)
+                & (n_var >= TRAP_MIN_VAR),
+                F.lit("trap"),
+            ).otherwise(F.col("stage")),
+        ).drop("_template", "_rank")
+    links, link_n = _checkpoint(
+        links,
+        n_redirected=F.count_if(F.col("_r_status") == "ok"),
+        n_redirect_loops=F.count_if(F.col("stage") == "redirect_loop"),
+        n_trap_dropped=F.count_if(F.col("stage") == "trap"),
+    )
+    candidates = links.where(F.col("stage").isNull()).groupBy("url").agg(
         F.first("host").alias("host"),
         F.min("crawl_depth").alias("crawl_depth"),
         F.min("src_url").alias("src_url"),
@@ -650,14 +623,11 @@ def run_round(
     # --- lineage + metrics ----------------------------------------------------
     lineage = (
         _lineage(blocked, STAGE_ROBOTS)
-        .unionByName(_lineage(country_flagged, STAGE_COUNTRY, "src_url"))
-        .unionByName(_lineage(dropped, STAGE_EXCLUDED, "src_url"))
-        .unionByName(_lineage(loop_dropped, "redirect_loop", "src_url"))
+        .unionByName(links.where(F.col("stage").isNotNull())
+                     .select("url", "stage", "src_url"))
         .unionByName(_lineage(fresh, "enqueued", "src_url"))
+        .withColumn("round", F.lit(round_no))
     )
-    if trap_dropped is not None:
-        lineage = lineage.unionByName(_lineage(trap_dropped, "trap", "src_url"))
-    lineage = lineage.withColumn("round", F.lit(round_no))
     elapsed = time.time() - t0
     totals = local_df(
         spark,
@@ -668,8 +638,7 @@ def run_round(
                 # every scheduled url is new: the claim invariant
                 "n_new": n_scheduled,
                 "n_enqueued": n_enqueued,
-                **link_n,  # n_redirected, n_redirect_loops
-                "n_trap_dropped": n_trap_dropped,
+                **link_n,  # n_redirected, n_redirect_loops, n_trap_dropped
                 "elapsed_sec": elapsed,
                 "urls_per_sec": n_scheduled / elapsed if elapsed > 0 else 0.0,
                 # max segment load factor (>1.0 ⇒ FP rate past design

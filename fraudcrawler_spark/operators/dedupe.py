@@ -64,9 +64,3 @@ def dedup_flag(
         .otherwise(F.col("filtered_at_stage")),
     ).withColumn("filtered", F.col("filtered") | prev_dup | cur_dup)
     return df.drop("_rn", "_in_seen")
-
-
-def newly_seen(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Urls claimed by this run = rows that survived dedup unflagged
-    (reference: ``_collected_urls_current_run``, orchestrator.py:185)."""
-    return df.where(~F.col("filtered")).select(url_col).distinct()

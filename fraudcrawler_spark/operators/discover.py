@@ -17,7 +17,7 @@ excluded-domain filter hard-drops (serp.py:244-246) via an anti-join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from fraudcrawler_spark.config import DEFAULT_MARKETPLACE, STAGE_COUNTRY
@@ -54,15 +54,12 @@ def topk_per_seed(matched: DataFrame) -> DataFrame:
     )
 
 
-def country_flag(df: DataFrame, country_code: str) -> DataFrame:
-    """F1 — keep iff ``.{cc}`` OR ``.com`` is a SUBSTRING of lower(url)
-    (reference serp.py:150-158 — substring, not suffix; quirk preserved)."""
-    keep = F.lower(F.col("url")).contains(f".{country_code.lower()}") | F.lower(
-        F.col("url")
-    ).contains(".com")
-    return df.withColumn("filtered", ~keep).withColumn(
-        "filtered_at_stage", F.when(~keep, F.lit(STAGE_COUNTRY)).otherwise(F.lit(None).cast("string"))
-    )
+def country_keep(url: Column, country_code: str) -> Column:
+    """F1 — true iff ``.{cc}`` OR ``.com`` is a SUBSTRING of lower(url)
+    (reference serp.py:150-158 — substring, not suffix; quirk preserved).
+    Discovery flags by it; sitemap seeding and the link gate drop by it."""
+    u = F.lower(url)
+    return u.contains(f".{country_code.lower()}") | u.contains(".com")
 
 
 def marketplace_join(df: DataFrame, hosts: DataFrame | None) -> DataFrame:
@@ -92,12 +89,15 @@ def marketplace_join(df: DataFrame, hosts: DataFrame | None) -> DataFrame:
     ).drop("_mp_name", "_mp_domain")
 
 
-def excluded_anti_join(df: DataFrame, excluded_hosts: DataFrame | None) -> DataFrame:
-    """J2/F2 — the one HARD drop: domain ∈ excluded dim (serp.py:244-246)."""
+def excluded_domains(excluded_hosts: DataFrame | None,
+                     name: str = "domain") -> DataFrame | None:
+    """J2 — the excluded-domain set (None without the dim): one row per
+    domain, in column ``name``, matched against ``canonical_host_expr``
+    of a url. The one HARD drop (serp.py:244-246), in discovery, sitemap
+    seeding and the link gate."""
     if excluded_hosts is None:
-        return df
-    excl = excluded_hosts.select(F.explode("domains").alias("domain")).distinct()
-    return df.join(F.broadcast(excl), "domain", "left_anti")
+        return None
+    return excluded_hosts.select(F.explode("domains").alias(name)).distinct()
 
 
 def discover(
@@ -109,10 +109,14 @@ def discover(
 ) -> DataFrame:
     """Full discovery stage: one row per (seed, discovered url), with
     ProductItem-shaped columns (reference orchestrator.py:136-144)."""
-    df = topk_per_seed(match_seed_terms(pages, seeds))
-    df = country_flag(df, country_code)
+    flag = ~country_keep(F.col("url"), country_code)
+    df = topk_per_seed(match_seed_terms(pages, seeds)).withColumn(
+        "filtered", flag
+    ).withColumn("filtered_at_stage", F.when(flag, F.lit(STAGE_COUNTRY)))
     df = marketplace_join(df, hosts)
-    df = excluded_anti_join(df, excluded_hosts)
+    excl = excluded_domains(excluded_hosts)
+    if excl is not None:
+        df = df.join(F.broadcast(excl), "domain", "left_anti")
     return df.select(
         "search_term",
         "search_term_type",

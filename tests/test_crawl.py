@@ -1,14 +1,20 @@
 """Frontier crawl: trace parity vs the golden simulator, politeness,
 robots, checkpoint/resume exactness (north_rule)."""
 
+from collections import Counter
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from fraudcrawler_spark.config import CrawlConfig
-from fraudcrawler_spark.frontier.crawl import run_crawl
+from fraudcrawler_spark.config import STAGE_COUNTRY, CrawlConfig
+from fraudcrawler_spark.frontier.crawl import STAGE_EXCLUDED, run_crawl
 from fraudcrawler_spark.frontier.politeness import STAGE_ROBOTS
-from tests.ref_sim import simulate_crawl
+from fraudcrawler_spark.functions.urls import (
+    canonical_host_py,
+    canonical_url_py,
+)
+from tests.ref_sim import keep_url, simulate_crawl
 
 CFG = CrawlConfig(host_budget=8, max_depth=2)
 ROUNDS = 4
@@ -87,12 +93,48 @@ def test_politeness_budget(crawl_state):
     assert (hm["n_scheduled"] <= CFG.host_budget).all()
 
 
-def test_round_counters_match_tables_and_golden(crawl_state, golden):
+def _gate_lineage_want(res: pd.DataFrame, excluded: set[str]) -> dict:
+    """A round's country and excluded lineage as ``(url, src_url)``
+    multisets, recomputed from its committed results: unflagged rows
+    within the depth bound, links exploded and canonicalized, then the
+    reference's country rule, then the excluded domains."""
+    want = {STAGE_COUNTRY: Counter(), STAGE_EXCLUDED: Counter()}
+    for row in res.itertuples():
+        if row.filtered or row.crawl_depth + 1 > CFG.max_depth:
+            continue
+        for raw in row.links if row.links is not None else ():
+            if raw is None:
+                continue
+            url = canonical_url_py(raw)
+            if not keep_url(url, CFG.country_code):
+                want[STAGE_COUNTRY][(url, row.url)] += 1
+            elif canonical_host_py(url) in excluded:
+                want[STAGE_EXCLUDED][(url, row.url)] += 1
+    return want
+
+
+def test_round_counters_match_tables_and_golden(crawl_state, golden,
+                                                corpus_dir):
     """Every round's metrics counters agree with the rows the round
-    committed and with the reference trace."""
+    committed and with the reference trace, and its country and excluded
+    lineage with a recomputation from its results."""
+    excluded = {
+        d for doms in pd.read_parquet(
+            f"{corpus_dir}/excluded_hosts.parquet")["domains"]
+        for d in doms
+    }
+    totals = Counter()
     last = crawl_state.read_manifest()["last_round"]
     assert last == len(golden["rounds"]) - 1
     for rnd, g in enumerate(golden["rounds"]):
+        lin = crawl_state.read("lineage", rnd).toPandas()
+        res = crawl_state.read("results", rnd).select(
+            "url", "filtered", "crawl_depth", "links").toPandas()
+        for stage, want in _gate_lineage_want(res, excluded).items():
+            got = Counter(zip(lin.url[lin.stage == stage],
+                              lin.src_url[lin.stage == stage]))
+            assert got == want, (rnd, stage)
+            totals[stage] += len(got)
         m = crawl_state.read("metrics", rnd).first()
         stages = dict(crawl_state.read("lineage", rnd).groupBy("stage")
                       .count().collect())
@@ -107,6 +149,7 @@ def test_round_counters_match_tables_and_golden(crawl_state, golden):
         # each fetched url counted once
         assert m["urls_per_sec"] == pytest.approx(
             m["n_scheduled"] / m["elapsed_sec"]), rnd
+    assert totals[STAGE_COUNTRY] > 0 and totals[STAGE_EXCLUDED] > 0, totals
 
 
 def test_robots_respected(crawl_state, spark, corpus_dir):

@@ -409,19 +409,41 @@ def _spliced_corpus(tmp_path_factory):
     return d, chain_root, loop_url
 
 
-def test_engine_redirect_and_trap_gates(spark, tmp_path_factory):
+def test_engine_redirect_and_trap_gates(spark, tmp_path_factory, monkeypatch):
     """Opt-in engine integration of the r5 network operators: with
     resolve_redirects + trap_gate on, redirect sources are rewritten to
     their landing url before enqueue, loops drop with lineage
     'redirect_loop', and the exploding calendar template never enters
     the frontier; with the flags off (default) all of them enqueue —
-    and the golden-trace path is untouched."""
+    and the golden-trace path is untouched. The gates ride the round's
+    one link-candidate checkpoint: each round takes as many
+    localCheckpoints with the flags on as off."""
     from fraudcrawler_spark.config import CrawlConfig
+    from fraudcrawler_spark.frontier import crawl as crawl_mod
     from fraudcrawler_spark.frontier.crawl import run_crawl
 
     d, chain_root, loop_url = _spliced_corpus(tmp_path_factory)
 
+    calls, checkpoints = [0], {}
+    DataFrame = type(spark.range(0))  # the session's concrete class
+    local_checkpoint, run_round = DataFrame.localCheckpoint, crawl_mod.run_round
+
+    def counting_checkpoint(self, *args, **kwargs):
+        calls[0] += 1
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting_checkpoint)
+
     def crawl(flags: bool):
+        per_round = checkpoints.setdefault(flags, {})
+
+        def counted_round(spark_, state, round_no, *args, **kwargs):
+            calls[0] = 0
+            out = run_round(spark_, state, round_no, *args, **kwargs)
+            per_round[round_no] = calls[0]
+            return out
+
+        monkeypatch.setattr(crawl_mod, "run_round", counted_round)
         root = str(tmp_path_factory.mktemp(f"gate_state_{flags}"))
         cfg = CrawlConfig(host_budget=8, max_depth=2,
                           resolve_redirects=flags, trap_gate=flags)
@@ -466,6 +488,8 @@ def test_engine_redirect_and_trap_gates(spark, tmp_path_factory):
     assert met_off.n_trap_dropped.sum() == 0
     assert met_off.n_redirected.sum() == 0
     assert final_target.startswith("https://")
+    assert all(checkpoints[False].values()), checkpoints
+    assert checkpoints[True] == checkpoints[False], checkpoints
 
 
 def test_dsir_reweight_discriminates(spark):
